@@ -1076,7 +1076,7 @@ def main() -> None:
 # sqrt(n) — the B·N/k BLAS term then grows as sqrt(N) instead of
 # linearly, which is the whole point of the r10 codebook-broadcast
 # fix. The TTL window is ENGAGED throughout (admit_batch-stamped
-# index, ttl_batches probes through _ttl_live_index), and a half-
+# index, ttl_batches probes through _live_index), and a half-
 # window probe at the largest size pins that the wall tracks the LIVE
 # row count, not table history.
 #

@@ -324,55 +324,7 @@ def main() -> None:
         spreads = {
             n: round(rates[n] / max(worst[n], 1e-9), 2) for n in rates
         }
-        # r9 commit-consolidation ablation: the three index gates in
-        # BOTH commit modes, interleaved merge/probe-free x2 in one
-        # process with best-of-2 per mode — between-round machine
-        # drift (±20% observed) and in-process warm-up order bias
-        # (whichever mode runs first measures cold) would otherwise
-        # swamp the within-gate delta this round claims
         run_ablations = os.environ.get("SPARK_GRAFT_STREAM_ABLATIONS", "1") != "0"
-        gate_makers = {} if not run_ablations else {
-            "novelty_gate": lambda out, ckpt, tag:
-                pipelines.novelty_gate_pipeline(
-                    parquet_stream(spark, doc_dir, DOC_SCHEMA),
-                    os.path.join(work, f"novelty_gate_{tag}", "fp_index"),
-                    out, ckpt, trigger={"availableNow": True},
-                ),
-            "neardup_gate": lambda out, ckpt, tag:
-                pipelines.neardup_gate_pipeline(
-                    parquet_stream(spark, doc_dir, DOC_SCHEMA),
-                    os.path.join(work, f"neardup_gate_{tag}", "nd_index"),
-                    out, ckpt, trigger={"availableNow": True},
-                ),
-            "overlap_gate": lambda out, ckpt, tag:
-                pipelines.overlap_gate_pipeline(
-                    parquet_stream(spark, doc_dir, DOC_SCHEMA),
-                    os.path.join(work, f"overlap_gate_{tag}", "fp_index"),
-                    out, ckpt, trigger={"availableNow": True},
-                ),
-        }
-        gate_commit_ablation = {}
-        for name, mk in gate_makers.items():
-            best = {"merge_keyed": 0.0, "probe_free": 0.0}
-            for rep in range(2):
-                for mode in ("merge_keyed", "probe_free"):
-                    pipelines.GATE_PROBE_FREE_INSERTS = mode == "probe_free"
-                    try:
-                        rate = run(
-                            f"{name}_{mode}_{rep}",
-                            lambda out, ckpt: mk(
-                                out, ckpt, f"{mode}_{rep}"
-                            ),
-                            doc_rows, work,
-                        )
-                    finally:
-                        pipelines.GATE_PROBE_FREE_INSERTS = True
-                    best[mode] = max(best[mode], rate)
-            gate_commit_ablation[name] = {
-                "probe_free": best["probe_free"],
-                "merge_keyed": best["merge_keyed"],
-                "ratio": round(best["probe_free"] / best["merge_keyed"], 3),
-            }
         # r10 fixed-cost decomposition (VERDICT r9 item 5): gmv has sat
         # at 2.2-2.6k rows/s for six rounds against a ~3.0k bare-append
         # ceiling. Decompose the gap over the SAME staged topic: bare
@@ -380,9 +332,8 @@ def main() -> None:
         # planning, offset+commit log), + date-partitioned write
         # (dynamic-partition commit), + within-batch dropDuplicates
         # (the one shuffle), then the full pipeline (+ replay guard
-        # hwm read/claim). Interleaved best-of-2 per variant, like the
-        # commit ablation above, so warm-up order and box drift don't
-        # masquerade as a delta.
+        # hwm read/claim). Interleaved best-of-2 per variant, so
+        # warm-up order and box drift don't masquerade as a delta.
         def _gmv_variant(kind, tag):
             def make(out, ckpt):
                 src = parquet_stream(spark, o_dir, ORDER_SCHEMA)
@@ -433,7 +384,6 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "streaming_rows_per_sec",
-                "gate_commit_ablation": gate_commit_ablation,
                 "gmv_fixed_cost_ablation": gmv_ablation,
                 # headline = min over the REFERENCE pipelines; the
                 # novelty gate and boilerplate dict run on the (tiny)

@@ -26,9 +26,8 @@ All ops are timed with the noop sink (guide §1.4) after a warm pass,
 best of 2 (scale_smoke's discipline). Prints ONE JSON line:
   {"metric": "core_scaling_probe", "amplify": N, "cpus": N,
    "sec": {op: best_sec, ...}}
-Run once with SPARK_GRAFT_CPUS=8 and once with 32; the ratio table in
-CORE_SCALING_r13.json / OPTIMIZATION_r13.md is assembled from the two
-lines.
+Run once with SPARK_GRAFT_CPUS=8 and once with 32, and compare the
+two lines op by op.
 """
 
 from __future__ import annotations

@@ -227,6 +227,14 @@ def array_containment_pairs(sets: DataFrame, threshold: float) -> DataFrame:
     )
 
 
+def _check_prefix_threshold(threshold: float) -> None:
+    """The prefix length |X| - ceil(t·|X|) + 1 is a valid, sound prefix
+    only for t in (0, 1]: above 1 the slice length goes negative inside
+    a Spark job, and at 0 the prefix cannot find pairs sharing nothing."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+
+
 def prefix_filtered_containment_pairs(
     sets: DataFrame, threshold: float
 ) -> DataFrame:
@@ -291,6 +299,7 @@ def prefix_filtered_containment_pairs(
     sort-window anywhere in the plan."""
     from pyspark.sql.window import Window
 
+    _check_prefix_threshold(threshold)
     sets = sets.localCheckpoint()
     posting = sets.select(
         "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("tok")
@@ -371,6 +380,7 @@ def prefix_filtered_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFram
     """
     from pyspark.sql.window import Window
 
+    _check_prefix_threshold(threshold)
     sets = sets.localCheckpoint()
     posting = sets.select("doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("tok"))
     tokf = posting.withColumn(

@@ -362,7 +362,8 @@ def curation_bundle(
     Identical output to the unfused composition (keep_best keeps
     exactly the rank-1 row of the same (score desc, id asc) window;
     dedup_aware_split's group_key is the same coalesce) — pinned by
-    the entry's DuckDB oracle and tests/test_round6_ops.py."""
+    the entry's DuckDB oracle and tests/test_operators_unit.py::
+    test_curation_bundle_matches_keep_best_and_dedup_aware_split."""
     from pyspark.sql.window import Window
 
     from .components import connected_components

@@ -20,9 +20,13 @@ Scale posture (100 TB / 1000-executor readiness):
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Confs that are runtime-settable (SQL confs). Applied both at build
 # time and defensively to externally-provided sessions (the driver
@@ -60,11 +64,21 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
+        except Exception as exc:
             # Static conf on this build -- leave as-is; reader has a
             # schema-level fallback for the nanos case.
-            pass
+            _log.warning("ensure_runtime_confs: skipped %s=%s (%s)", key, value, exc)
     return spark
+
+
+def _master_cores(master: str) -> int | None:
+    """Cores of a ``local``/``local[N]``/``local[N,F]`` master; None
+    for ``local[*]`` and for cluster masters (the caller falls back to
+    the host's core count)."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\s*\d+)?\])?", master.strip())
+    if m is None or m.group(1) == "*":
+        return None
+    return int(m.group(1) or 1)
 
 
 def get_spark(app_name: str = "gmall-spark-engine", master: str | None = None) -> SparkSession:
@@ -75,10 +89,7 @@ def get_spark(app_name: str = "gmall-spark-engine", master: str | None = None) -
     passes no master and spark-submit decides.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    else:
-        cpus = "*"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     # Shuffle partitions SCALE WITH THE SESSION'S CORES (r13, VERDICT
     # r12 item 1): the pre-r13 constant 8 (an early-round sf0.1
     # measurement) capped every post-shuffle stage at 8 tasks, so an
@@ -96,10 +107,7 @@ def get_spark(app_name: str = "gmall-spark-engine", master: str | None = None) -
     # launcher can pin an explicit value.
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if shuffle_parts is None:
-        try:
-            n_cores = int(cpus)
-        except ValueError:
-            n_cores = os.cpu_count() or 8
+        n_cores = _master_cores(master) or os.cpu_count() or 8
         shuffle_parts = str(max(8, n_cores))
     builder = (
         SparkSession.builder.appName(app_name)
@@ -111,9 +119,8 @@ def get_spark(app_name: str = "gmall-spark-engine", master: str | None = None) -
         # by default; a 154-query workload recompiles every generated
         # stage on every sweep once the cache thrashes. 4096 entries
         # keeps every plan's codegen warm — a core-count-independent
-        # engine setting (measured both at 8 and 32 cores; see
-        # OPTIMIZATION_r13.md). Runtime-set attempts are silently
-        # skipped by ensure_runtime_confs for driver-owned sessions.
+        # engine setting. It is static, so it takes effect only on a
+        # session built here, never on a driver-owned one.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for key, value in RUNTIME_CONFS.items():

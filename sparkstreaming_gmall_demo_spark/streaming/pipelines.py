@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 
 from ..functions import age_as_of, log_date, log_hour, minute_bucket
 from ..operators.bucketing import idempotent_append_bucketed
+from . import txn
 from .sinks import (
     fanout,
     idempotent_append,
@@ -50,6 +51,20 @@ DEFAULT_TRIGGER = {"processingTime": "5 seconds"}  # reference DauApp.scala:22
 def _start(writer, checkpoint: str, trigger: dict | None):
     trig = trigger if trigger is not None else DEFAULT_TRIGGER
     return writer.option("checkpointLocation", checkpoint).trigger(**trig).start()
+
+
+def _keyed_sink(out_path: str, key_cols: list, partition_cols=None, transform=None):
+    """The foreachBatch sink of a keyed serving table: ``transform``
+    the batch, then ``idempotent_append`` it on ``key_cols`` — a
+    replayed batch id is a no-op, so the table is exactly-once."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        idempotent_append(
+            transform(batch_df) if transform else batch_df, out_path,
+            key_cols=key_cols, partition_cols=partition_cols, batch_id=batch_id,
+        )
+
+    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -132,16 +147,10 @@ def gmv_pipeline(
         "create_date", F.to_date("create_time")
     ).withColumn("create_hour", F.hour("create_time"))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = split_dead_letter(batch_df, dead_letter).drop("_corrupt")
-        idempotent_append(
-            batch_df,
-            out_path,
-            key_cols=["id"],
-            partition_cols=["create_date"],
-            batch_id=batch_id,
-        )
-
+    sink = _keyed_sink(
+        out_path, ["id"], ["create_date"],
+        lambda b: split_dead_letter(b, dead_letter).drop("_corrupt"),
+    )
     return _start(derived.writeStream.foreachBatch(sink), checkpoint, trigger)
 
 
@@ -203,12 +212,7 @@ def alert_pipeline(
         )
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(
-            batch_df, out_path, key_cols=["mid", "minute_bucket"], partition_cols=None,
-            batch_id=batch_id,
-        )
-
+    sink = _keyed_sink(out_path, ["mid", "minute_bucket"])
     return _start(
         windowed.writeStream.outputMode("append").foreachBatch(sink),
         checkpoint,
@@ -466,13 +470,7 @@ def session_pipeline(
         )
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(
-            batch_df, out_path,
-            key_cols=["mid", "session_start"], partition_cols=None,
-            batch_id=batch_id,
-        )
-
+    sink = _keyed_sink(out_path, ["mid", "session_start"])
     return _start(
         sess.writeStream.outputMode("append").foreachBatch(sink),
         checkpoint,
@@ -507,158 +505,12 @@ def decontamination_pipeline(
     the consumer's policy decision, the gate only scores)."""
     from ..operators import decontam as decon_ops
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        flags = decon_ops.flag_contaminated(
-            batch_df, eval_docs, shingle_n=shingle_n, threshold_pct=threshold_pct
-        )
-        idempotent_append(
-            flags, out_path, key_cols=["doc_id"], partition_cols=None,
-            batch_id=batch_id,
-        )
-
-    return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)
-
-
-def novelty_gate_pipeline(
-    docs: DataFrame,
-    index_table: str,
-    out_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    ttl_batches: int | None = None,
-    compact_every: int = 8,
-) -> StreamingQuery:
-    """Incremental-ingest dedup gate: per micro-batch, pass through
-    only documents whose content fingerprint is NOT already in the
-    corpus index, then commit the survivors' fingerprints back into
-    the index — the streaming form of ext_incremental_dedup's probe,
-    closed into a loop (today's novel docs are tomorrow's index).
-
-    The index is a txn-table (streaming/txn.py) keyed on the 32-char
-    md5 digest: ``merge_keyed`` makes the index update transactional
-    and replay-safe (a replayed batch anti-joins itself away), and the
-    keyed ``idempotent_append`` makes the doc sink replay-safe — so
-    the whole gate is exactly-once under micro-batch replay with NO
-    streaming state: cross-batch memory lives in the index table, the
-    same at 100 TB (32 bytes/doc) as here. Within-batch duplicates
-    collapse to the lowest doc_id before the probe, so a batch
-    carrying two copies of a new document emits one.
-
-    ``ttl_batches`` bounds the state: with it set, the index rows are
-    (fingerprint, admit_batch) and a fingerprint only suppresses
-    duplicates for exactly ``ttl_batches`` micro-batches after
-    ADMISSION (live iff admit_batch >= batch_id - ttl_batches; a
-    legacy single-column index from the unbounded mode is migrated on
-    first contact by stamping its rows as just-admitted) — after that
-    the content is admitted again and re-stamped (a new
-    (fingerprint, admit_batch) row; merge_keyed on the PAIR keeps
-    replays of the same batch a no-op while letting re-admission
-    insert). Every ``compact_every`` batches the sink vacuums expired
-    rows with a CAS-guarded overwrite, so index size is bounded by the
-    TTL window's distinct-content volume instead of growing forever —
-    the difference between a dedup index that survives years of
-    ingest and one that eats the cluster. This is the engine-grade
-    form of the reference's Redis expiry discipline — the join buffer
-    SETs with EXPIRE 10 (app/SaleDetailApp.scala:93,131) and the
-    day-scoped dedup registry (handler/DauHandler.scala:61-73) both
-    bound state by time-to-live, never by unbounded growth. Expiry
-    here counts BATCHES (deterministic under the test clock); a
-    production gate keys the same two-column layout on an event-time
-    watermark instead — the probe filter and vacuum predicate are the
-    only two lines that change. ``ttl_batches=None`` keeps the original unbounded
-    append-only index (fingerprint only), byte-compatible with
-    existing tables."""
-    from ..operators.dedup import novel_against_index
-    from . import txn
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if txn.current_version(index_table) >= 0:
-            if ttl_batches is not None:
-                # a fingerprint admitted at batch a suppresses batches
-                # a+1 .. a+ttl (ttl_batches=1 suppresses exactly the
-                # next batch). Batch-TTL expiry + one-time legacy stamp
-                # migration via the helper shared with the fuzzy and
-                # semantic gates — it also carries table meta through
-                # the migration rewrite, a hole the inline copy had
-                # (round-8 advice).
-                index = _ttl_live_index(spark, index_table, batch_id, ttl_batches)
-            else:
-                index = txn.snapshot(spark, index_table)
-        else:
-            index = spark.createDataFrame(
-                [],
-                "fingerprint string"
-                if ttl_batches is None
-                else "fingerprint string, admit_batch long",
-            )
-        # micro-batches take the inverted broadcast probe: the digest
-        # index — the side that grows at 100 TB — is scanned map-side,
-        # never shuffled or sorted (the default anti-join SMJ plan
-        # exchanges+sorts the WHOLE index per batch — the linear-probe
-        # regime the r10 index-size sweep measures). The batch is
-        # persisted around the whole sink: the plan-sizing count below
-        # then materializes it ONCE, instead of recomputing the source
-        # per downstream job — a parquet micro-batch made the count a
-        # metadata read, but a Kafka-style source would replay the
-        # whole batch for it (round-10 advice).
-        batch_df = batch_df.persist()
-        small = batch_df.count() <= GATE_BROADCAST_ROW_CAP
-        fresh = novel_against_index(
-            batch_df, index.select("fingerprint"), broadcast_probe=small
-        )
-        first = (
-            fresh.withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("fingerprint").orderBy("doc_id")
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        out = first.persist()
-        try:
-            n_admit = out.count()
-            idempotent_append(
-                out.drop("fingerprint"), out_path, key_cols=["doc_id"],
-                partition_cols=None, batch_id=batch_id,
-            )
-            # probe-free insert (txn.append_new): the admitted
-            # fingerprints were derived by anti-joining THIS snapshot,
-            # so they are new-by-construction; replays are fenced by
-            # the appended_through watermark. Drops the merge's
-            # per-batch anti-join + count jobs — the fixed cost that
-            # bounded small micro-batches (r8 verdict item 7).
-            if ttl_batches is None:
-                fp_rows = out.select("fingerprint")
-                fp_keys = ["fingerprint"]
-            else:
-                fp_rows = out.select(
-                    "fingerprint",
-                    F.lit(batch_id).cast("long").alias("admit_batch"),
-                )
-                fp_keys = ["fingerprint", "admit_batch"]
-            if GATE_PROBE_FREE_INSERTS:
-                txn.append_new(fp_rows, index_table, batch_id, n_rows=n_admit)
-            else:
-                txn.merge_keyed(
-                    fp_rows, index_table, key_cols=fp_keys,
-                    broadcast_probe=n_admit <= GATE_BROADCAST_ROW_CAP,
-                )
-        finally:
-            out.unpersist()
-            batch_df.unpersist()
-        if (
-            ttl_batches is not None
-            and compact_every  # 0 = never vacuum (the sketch-pipeline convention)
-            and batch_id % compact_every == compact_every - 1
-        ):
-            # bounded-state vacuum via the shared helper: CAS-pinned
-            # AND meta-carrying — the inline overwrite here silently
-            # dropped commit metadata (round-8 advice)
-            _ttl_vacuum(spark, index_table, batch_id, ttl_batches)
-
+    sink = _keyed_sink(
+        out_path, ["doc_id"],
+        transform=lambda b: decon_ops.flag_contaminated(
+            b, eval_docs, shingle_n=shingle_n, threshold_pct=threshold_pct
+        ),
+    )
     return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)
 
 
@@ -676,53 +528,36 @@ def sketch_pipeline(
     token stream collapses to its own depth x width cell counts, and
     the batch sketch is committed keyed by (batch_id, d, b).
 
-    Exactly-once by construction, with NO streaming state: the sketch
-    is mergeable by addition (operators/sketch.py), so instead of
-    read-modify-writing one global sketch (a lost-update hazard under
-    replay), each batch INSERTS its immutable partial keyed by
-    batch_id — the ``txn.append_new`` batch fence (plus the
-    compaction watermark guard) makes a replayed batch a no-op —
-    and readers merge at query time with ``cm_read_merged`` (sum cells
-    over batches, then min over depth as usual). Storage is
-    batches x depth x width rows of three ints; ``compact_every=N``
-    opts into folding the partials (:func:`compact_sketch_partials`)
-    every N batches from inside the sink — safe because the sink is
-    the table's only writer — keeping storage at ~depth x width rows
-    however long the pipeline runs."""
+    The sketch is mergeable by addition (operators/sketch.py), so
+    instead of read-modify-writing one global sketch (a lost-update
+    hazard under replay), each batch INSERTS its immutable partial
+    (exactly-once: :func:`_partials_sink`) and readers merge at query
+    time with ``cm_read_merged`` (sum cells over batches, then min over
+    depth as usual). Storage is batches x depth x width rows of three
+    ints; ``compact_every=N`` folds the partials
+    (:func:`compact_sketch_partials`) every N batches from inside the
+    sink, keeping storage at ~depth x width rows."""
     from ..operators.sketch import cm_build
-    from . import txn
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= txn.table_meta(sketch_table).get("compacted_through", -1):
-            return  # replayed batch already folded by compact_partials
-        toks = batch_df.select(
-            F.explode(F.split(F.col(text_col), " ")).alias("token")
-        )
-        cells = cm_build(toks, depth=depth, width=width).select(
-            F.lit(batch_id).cast("long").alias("batch_id"), "d", "b", "c"
-        )
-        # probe-free insert: cells are keyed by THIS batch id, the
-        # compacted_through guard above already fences folded batches,
-        # and append_new's own appended_through fence covers intact
-        # replays — the per-batch anti-join bought nothing (r8 item 7)
-        txn.append_new(cells, sketch_table, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_sketch_partials(batch_df.sparkSession, sketch_table)
-
+    sink = _partials_sink(
+        sketch_table, compact_sketch_partials, compact_every,
+        lambda b: cm_build(
+            b.select(F.explode(F.split(F.col(text_col), " ")).alias("token")),
+            depth=depth, width=width,
+        ),
+    )
     return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)
+
+
+def _cm_merge(df: DataFrame) -> DataFrame:
+    return df.groupBy("d", "b").agg(F.sum("c").alias("c"))
 
 
 def cm_read_merged(spark: SparkSession, sketch_table: str) -> DataFrame:
     """Merge the per-batch partial sketches into the current global
     sketch (d, b, c): cellwise sum — the same merge a distributed
     aggregation does map-side, applied across batches."""
-    from . import txn
-
-    return (
-        txn.snapshot(spark, sketch_table)
-        .groupBy("d", "b")
-        .agg(F.sum("c").alias("c"))
-    )
+    return _cm_merge(txn.snapshot(spark, sketch_table))
 
 
 def ann_ingest_pipeline(
@@ -742,13 +577,9 @@ def ann_ingest_pipeline(
     broadcast-literal centroids."""
     from ..operators.similarity import ivf_assign
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = ivf_assign(batch_df, centroids)
-        idempotent_append(
-            assigned, index_path, key_cols=["vec_id"],
-            partition_cols=["cluster"], batch_id=batch_id,
-        )
-
+    sink = _keyed_sink(
+        index_path, ["vec_id"], ["cluster"], lambda b: ivf_assign(b, centroids)
+    )
     return _start(vectors.writeStream.foreachBatch(sink), checkpoint, trigger)
 
 
@@ -772,12 +603,9 @@ def sq8_ingest_pipeline(
     identically)."""
     from ..operators.similarity import sq8_encode
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(
-            sq8_encode(batch_df, lo, hi), f"{index_path}/codes",
-            key_cols=["vec_id"], batch_id=batch_id,
-        )
-
+    sink = _keyed_sink(
+        f"{index_path}/codes", ["vec_id"], transform=lambda b: sq8_encode(b, lo, hi)
+    )
     return _start(vectors.writeStream.foreachBatch(sink), checkpoint, trigger)
 
 
@@ -793,49 +621,36 @@ def hll_pipeline(
 ) -> StreamingQuery:
     """Continuous rolling-distinct maintenance: each micro-batch
     collapses to one HLL sketch per day it touched, committed keyed by
-    (batch_id, d) — the same immutable-partials/no-streaming-state
-    discipline as :func:`sketch_pipeline` (exactly-once: a replayed
-    batch is fenced by ``txn.append_new``'s batch watermark; folded
-    batches by the compaction watermark). Readers merge at query time (:func:`hll_read_daily`), and
-    because HLL registers are max-merged, chunking is invisible: the
-    merged estimate is bit-identical to a one-shot batch sketch over
-    the same rows. Storage: one ~2^lgk-byte blob per (batch, day).
+    (batch_id, d) — the immutable-partials discipline of
+    :func:`_partials_sink`. Readers merge at query time
+    (:func:`hll_read_daily`), and because HLL registers are
+    max-merged, chunking is invisible: the merged estimate is
+    bit-identical to a one-shot batch sketch over the same rows.
+    Storage: one ~2^lgk-byte blob per (batch, day).
 
     This is the streaming half of operators/sketch.py:
     hll_daily_partials — together they answer DAU/WAU/MAU over any
     range without ever re-scanning events (reference twin: the Redis
     per-day dedup set of handler/DauHandler.scala:26-60, generalized to
     a mergeable estimate with bounded storage)."""
-    from . import txn
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= txn.table_meta(sketch_table).get("compacted_through", -1):
-            return  # replayed batch already folded by compact_partials
-        partials = (
-            batch_df.select(F.to_date(F.col(ts_col)).alias("d"), F.col(key).alias("k"))
-            .groupBy("d")
-            .agg(F.hll_sketch_agg("k", F.lit(lgk)).alias("sketch"))
-            .select(F.lit(batch_id).cast("long").alias("batch_id"), "d", "sketch")
-        )
-        # probe-free insert: see sketch_pipeline
-        txn.append_new(partials, sketch_table, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_hll_partials(batch_df.sparkSession, sketch_table)
-
+    sink = _partials_sink(
+        sketch_table, compact_hll_partials, compact_every,
+        lambda b: b.select(F.to_date(F.col(ts_col)).alias("d"), F.col(key).alias("k"))
+        .groupBy("d")
+        .agg(F.hll_sketch_agg("k", F.lit(lgk)).alias("sketch")),
+    )
     return _start(events.writeStream.foreachBatch(sink), checkpoint, trigger)
+
+
+def _hll_merge(df: DataFrame) -> DataFrame:
+    return df.groupBy("d").agg(F.hll_union_agg("sketch").alias("sketch"))
 
 
 def hll_read_daily(spark: SparkSession, sketch_table: str) -> DataFrame:
     """Merge the per-batch partials into one sketch per day
     (d, sketch) — directly consumable by
     operators/sketch.py:hll_prefix_estimates for rolling rollups."""
-    from . import txn
-
-    return (
-        txn.snapshot(spark, sketch_table)
-        .groupBy("d")
-        .agg(F.hll_union_agg("sketch").alias("sketch"))
-    )
+    return _hll_merge(txn.snapshot(spark, sketch_table))
 
 
 def bm25_index_pipeline(
@@ -862,9 +677,13 @@ def bm25_index_pipeline(
     per-term dfs, results bit-identical to the corpus-scan bm25_topk
     over the ingested docs."""
     from ..operators import bm25index as bi
-    from . import txn
 
     nb = n_buckets if n_buckets is not None else bi.BM25_BUCKETS
+    stats_sink = _partials_sink(
+        stats_table, compact_bm25_stats, compact_every,
+        lambda b: bi.bm25_stats_partial(b).select("n_docs", "sum_dl"),
+        n_rows=1,
+    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # Spread before the analyze/explode kernel: a one-file
@@ -878,16 +697,7 @@ def bm25_index_pipeline(
                 partition_cols=["tb"],
                 batch_id=batch_id,
             )
-            if batch_id > txn.table_meta(stats_table).get("compacted_through", -1):
-                partial = bi.bm25_stats_partial(batch_df).select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "n_docs", "sum_dl",
-                )
-                # probe-free insert of the 1-row partial: see
-                # sketch_pipeline
-                txn.append_new(partial, stats_table, batch_id, n_rows=1)
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                compact_bm25_stats(batch_df.sparkSession, stats_table)
+            stats_sink(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 
@@ -897,8 +707,6 @@ def bm25_index_pipeline(
 def bm25_read_stats(spark: SparkSession, stats_table: str) -> DataFrame:
     """The (n_docs, sum_dl) partial rows — feed directly to
     bm25_index_topk, which folds them by addition."""
-    from . import txn
-
     return txn.snapshot(spark, stats_table).select("n_docs", "sum_dl")
 
 
@@ -927,45 +735,28 @@ def boilerplate_pipeline(
     DISTINCT n-grams so a doc never votes twice — committed keyed by
     (batch_id, gram). Because every document arrives in exactly one
     batch, summing per-batch dfs IS the global distinct-doc count: the
-    partial is mergeable by addition, the same
-    immutable-partials/no-streaming-state discipline as
-    :func:`sketch_pipeline` (a replayed
-    batch is fenced by ``txn.append_new``'s batch watermark before any
-    job runs; folded batches by the compaction watermark). Readers derive the
-    current dictionary at query time
+    partial is mergeable by addition (the :func:`_partials_sink`
+    discipline). Readers derive the current dictionary at query time
     (:func:`boilerplate_read_dictionary`) and feed it straight into
     operators/text.py:boilerplate_coverage — so the repeated-passage
     audit of a 100 TB corpus never re-scans ingested text; new batches
     only ever ADD gram votes. Storage: (batches x batch-distinct
     grams) short rows, compactable by re-keying closed batches."""
     from ..operators.text import _positioned_ngrams
-    from . import txn
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= txn.table_meta(gram_table).get("compacted_through", -1):
-            return  # replayed batch already folded by compact_partials
-        partial = (
-            _positioned_ngrams(batch_df, n, "doc_id", text_col)
-            .select("doc_id", "gram")
-            .distinct()
-            .groupBy("gram")
-            .agg(F.count("*").alias("df"))
-            .select(F.lit(batch_id).cast("long").alias("batch_id"), "gram", "df")
-        ).persist()
-        try:
-            # probe-free insert (see sketch_pipeline) — which also
-            # retires the r8 broadcast-cap concern for this merge: an
-            # unbounded batch gram dictionary no longer broadcasts
-            # anything, it just stages row-count-sized files
-            txn.append_new(
-                partial, gram_table, batch_id, n_rows=partial.count()
-            )
-        finally:
-            partial.unpersist()
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_boilerplate_dictionary(batch_df.sparkSession, gram_table)
-
+    sink = _partials_sink(
+        gram_table, compact_boilerplate_dictionary, compact_every,
+        lambda b: _positioned_ngrams(b, n, "doc_id", text_col)
+        .select("doc_id", "gram")
+        .distinct()
+        .groupBy("gram")
+        .agg(F.count("*").alias("df")),
+    )
     return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)
+
+
+def _gram_merge(df: DataFrame) -> DataFrame:
+    return df.groupBy("gram").agg(F.sum("df").alias("df"))
 
 
 def boilerplate_read_dictionary(
@@ -975,20 +766,45 @@ def boilerplate_read_dictionary(
     per-batch dfs summed (exact, since each doc lands in one batch),
     thresholded at ``min_df``. Mirrors the batch
     operators/text.py:boilerplate_ngrams output exactly."""
-    from . import txn
-
-    return (
-        txn.snapshot(spark, gram_table)
-        .groupBy("gram")
-        .agg(F.sum("df").alias("df"))
-        .filter(F.col("df") >= min_df)
-    )
+    return _gram_merge(txn.snapshot(spark, gram_table)).filter(F.col("df") >= min_df)
 
 
 # ---------------------------------------------------------------------------
-# Partial-table compaction: bounded storage for the continuous
-# sketch/dictionary pipelines
+# Per-batch partials tables: the one sink skeleton and the compaction
+# that bounds their storage
 # ---------------------------------------------------------------------------
+def _due(batch_id: int, every: int | None) -> bool:
+    """The maintenance cadence every gate vacuum and partials
+    compaction runs on: batches every-1, 2*every-1, ...; 0 or None
+    never (entry checks reject a negative ``every``)."""
+    return bool(every) and (batch_id + 1) % every == 0
+
+
+def _partials_sink(table: str, compact, compact_every, partial, n_rows=None):
+    """The foreachBatch sink of a per-batch partials table:
+    ``partial(batch_df)`` is committed keyed by (batch_id, ...) and
+    folded by ``compact(spark, table)`` on the shared cadence.
+    Exactly-once with no streaming state: a batch at or below the
+    ``compacted_through`` watermark is already folded and skipped
+    before any job runs, and an intact replay is fenced by
+    ``txn.append_new``'s appended_through watermark (the rows are keyed
+    by THIS batch id, so the insert needs no anti-join probe).
+    ``n_rows``: the row count, when known without a job."""
+    _check_gate_params(None, compact_every)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= txn.table_meta(table).get("compacted_through", -1):
+            return  # replayed batch already folded by compact_partials
+        rows = partial(batch_df).select(
+            F.lit(batch_id).cast("long").alias("batch_id"), "*"
+        )
+        txn.append_new(rows, table, batch_id, n_rows=n_rows)
+        if _due(batch_id, compact_every):
+            compact(batch_df.sparkSession, table)
+
+    return sink
+
+
 def compact_partials(spark: SparkSession, table: str, merge_fn) -> int:
     """Collapse a per-batch partials table (CM cells / HLL day
     sketches / boilerplate gram-dfs) into ONE merged row-set, keeping
@@ -1020,8 +836,6 @@ def compact_partials(spark: SparkSession, table: str, merge_fn) -> int:
     writer's just-committed batch) and this loop re-derives the merge
     from the fresh snapshot — the same rebase rule txn.compact_files
     uses. Run with no concurrent COMPACTOR, like txn.vacuum."""
-    from . import txn
-
     for _ in range(20):
         # capture the version BEFORE reading the snapshot: the merge +
         # count below are expensive jobs, and a merge_keyed writer
@@ -1069,32 +883,24 @@ def compact_partials(spark: SparkSession, table: str, merge_fn) -> int:
 def compact_sketch_partials(spark: SparkSession, sketch_table: str) -> int:
     """Fold all per-batch CM partials into one cellwise-summed sketch
     (storage: exactly depth x width rows however many batches ran)."""
-    return compact_partials(
-        spark, sketch_table,
-        lambda df: df.groupBy("d", "b").agg(F.sum("c").alias("c")),
-    )
+    return compact_partials(spark, sketch_table, _cm_merge)
 
 
 def compact_hll_partials(spark: SparkSession, sketch_table: str) -> int:
     """Fold all per-batch HLL day-partials into one max-merged sketch
     per day (storage: one ~kB blob per calendar day)."""
-    return compact_partials(
-        spark, sketch_table,
-        lambda df: df.groupBy("d").agg(F.hll_union_agg("sketch").alias("sketch")),
-    )
+    return compact_partials(spark, sketch_table, _hll_merge)
 
 
 def compact_boilerplate_dictionary(spark: SparkSession, gram_table: str) -> int:
     """Fold all per-batch gram-df partials into one summed row per
     gram (storage: corpus gram diversity, independent of batch count)."""
-    return compact_partials(
-        spark, gram_table,
-        lambda df: df.groupBy("gram").agg(F.sum("df").alias("df")),
-    )
+    return compact_partials(spark, gram_table, _gram_merge)
 
 
 # ---------------------------------------------------------------------------
-# Near-duplicate novelty gate: the fuzzy upgrade of novelty_gate_pipeline
+# Indexed ingest gates (exact novelty, MinHash near-dup, winnowing
+# overlap, semantic): one foreachBatch skeleton, one admit strategy each
 # ---------------------------------------------------------------------------
 # Hot-bucket bound for the cross-batch band-index probe: at most this
 # many verification candidates per probe doc (see neardup_gate_admit).
@@ -1130,15 +936,6 @@ NEARDUP_GATE_CC_DRIVER_CAP = NEARDUP_GATE_CC_DRIVER_BUDGET_BYTES // 16
 # forces the fallback (the round-8 test contract).
 SEMANTIC_GATE_BROADCAST_PROBE_CAP = 200_000
 SEMANTIC_GATE_PROBE_DIM_BUDGET = 64
-
-# Ablation/compat switch for the gates' index commits: True (default)
-# uses txn.append_new — probe-free, replay-fenced by batch watermark;
-# False routes every insert through txn.merge_keyed's per-batch
-# anti-join, the pre-round-9 path. Identical admissions either way
-# (pinned by the gates' replay suites run under both modes);
-# bench_streaming measures both in one run so the commit-consolidation
-# speedup is a within-run ratio, immune to machine drift.
-GATE_PROBE_FREE_INSERTS = True
 
 # Batch-side frames (ids, band rows, fingerprint rows) broadcast into
 # the gate index probes and keyed merges only while the batch stays
@@ -1181,23 +978,22 @@ def _driver_union_find(pair_rows) -> dict[int, int]:
     return {node: find(node) for node in list(parent)}
 
 
-def _ttl_live_index(spark, table: str, batch_id: int, ttl_batches: int):
-    """Load a gate index snapshot under batch-TTL semantics (the
-    novelty_gate_pipeline discipline, factored out for the fuzzy and
-    semantic gates): migrate a legacy stamp-less table ONCE by
-    stamping every row as just-admitted and rewriting (conservative —
-    legacy rows suppress for one full TTL from the switch-over; the
-    one-time rewrite keeps storage uniformly stamped instead of
-    leaving mixed file schemas behind later keyed merges), then
-    return only the LIVE rows: admit_batch >= batch_id - ttl_batches.
-    batch_id is replay-stable (checkpoint-assigned) and the vacuum
-    only ever removes rows this filter drops anyway, so the live view
-    — and with it every probe decision — is identical on a replay
-    whether or not the crash interleaved with a vacuum."""
-    from . import txn
-
+def _live_index(spark, table: str, batch_id, ttl_batches):
+    """The index a gate probes: None before the table exists, the
+    plain snapshot without TTL, and under TTL only the LIVE rows,
+    admit_batch >= batch_id - ttl_batches. A legacy stamp-less table
+    is migrated ONCE by stamping every row as just-admitted (legacy
+    rows then suppress for one full TTL) and rewriting, so storage
+    stays uniformly stamped. batch_id is replay-stable and the vacuum
+    only removes rows this filter drops anyway, so the live view — and
+    every probe decision — is identical on a replay whether or not the
+    crash interleaved with a vacuum."""
     v = txn.current_version(table)
+    if v < 0:
+        return None
     idx = txn.snapshot(spark, table, version=v)
+    if ttl_batches is None:
+        return idx
     if "admit_batch" not in idx.columns:
         idx = idx.withColumn("admit_batch", F.lit(batch_id).cast("long"))
         # meta carried forward: an overwrite must never silently drop
@@ -1227,8 +1023,6 @@ def _ttl_vacuum(
     gate vacuums its index range-partitioned + sorted by ``cluster``,
     so the next probe scan's cluster filter skips whole files via
     parquet min/max stats instead of reading the full index."""
-    from . import txn
-
     v = txn.current_version(table)
     if v < 0:
         return
@@ -1251,28 +1045,190 @@ def _ttl_vacuum(
         # rewrite's file count (txn.files_for_rows — row-proportional,
         # never a hardcoded write-parallelism cap)
         live = live.persist()
-        try:
-            n_live = live.count()
-            txn.overwrite(
-                txn.clustered(live, order_by, txn.files_for_rows(n_live)),
-                table,
-                meta=meta,
-                expected_version=v,
-            )
-        finally:
+    try:
+        rewrite = (
+            txn.clustered(live, order_by, txn.files_for_rows(live.count()))
+            if order_by else live
+        )
+        txn.overwrite(rewrite, table, meta=meta, expected_version=v)
+    finally:
+        if order_by:
             live.unpersist()
-        txn.vacuum_orphans(table, min_age_s=GATE_ORPHAN_AGE_S)
-        return
-    txn.overwrite(live, table, meta=meta, expected_version=v)
     # piggyback the age-gated orphan-staging GC on the same cadence:
     # crashed/lost-race writers leave _staged/<uuid> dirs no manifest
     # references, and this hook is the gates' only maintenance slot
     txn.vacuum_orphans(table, min_age_s=GATE_ORPHAN_AGE_S)
 
 
-def _require_batch_id(ttl_batches, batch_id) -> None:
+def _check_gate_params(ttl_batches, compact_every=None, batch_id=0) -> None:
+    """Reject bad gate and cadence parameters on entry, before any
+    Spark job: ttl_batches=0 would silently suppress nothing, a TTL
+    needs the batch clock (``batch_id``, checked by the admit
+    functions), and a negative compact_every has no cadence."""
+    if ttl_batches is not None and ttl_batches < 1:
+        raise ValueError(f"ttl_batches must be >= 1 or None, got {ttl_batches}")
     if ttl_batches is not None and batch_id is None:
         raise ValueError("ttl_batches requires batch_id (the replay-stable clock)")
+    if compact_every is not None and compact_every < 0:
+        raise ValueError(f"compact_every must be >= 0, got {compact_every}")
+
+
+def _commit_index(
+    rows: DataFrame, table: str, batch_id, ttl_batches, key_cols: list,
+    n_rows=None, broadcast_probe: bool = False,
+) -> None:
+    """The stamped index commit of a gate's admitted rows. Under TTL
+    the ``admit_batch`` stamp joins the rows AND the key, so an id
+    re-admitted after its rows expired inserts a FRESH stamped row
+    while a replay re-derives the same (id, admit_batch). With a batch
+    id the insert is probe-free (``txn.append_new``): the rows are new
+    against this batch's snapshot by construction, and a replay is
+    fenced by the appended_through watermark; ``n_rows`` only sizes
+    the staged files (None: append_new counts). A backfill call without
+    a batch id has no fence and takes the keyed ``txn.merge_keyed``."""
+    if ttl_batches is not None:
+        rows = rows.select("*", F.lit(batch_id).cast("long").alias("admit_batch"))
+        key_cols = [*key_cols, "admit_batch"]
+    if batch_id is not None:
+        txn.append_new(rows, table, batch_id, n_rows=n_rows)
+    else:
+        txn.merge_keyed(
+            rows, table, key_cols=key_cols, broadcast_probe=broadcast_probe
+        )
+
+
+def _gate_pipeline(
+    stream: DataFrame,
+    out_path: str,
+    checkpoint: str,
+    trigger: dict | None,
+    id_col: str,
+    admit,
+    index_tables: list,
+    ttl_batches: int | None,
+    compact_every: int,
+    order_by: list | None = None,
+) -> StreamingQuery:
+    """The foreachBatch skeleton of every indexed ingest gate.
+    ``admit(batch_df, batch_id, cached)`` is the gate's strategy: it
+    adds every frame it persists to ``cached`` (released here, whatever
+    happens) and returns ``(docs, commit_index)``: the admitted rows and
+    the index commit to run AFTER the doc append (None for a gate that
+    commits inside its admit). Under TTL the ``index_tables`` are
+    vacuumed, in order, on the shared cadence.
+
+    Exactly-once with NO streaming state — the Structured Streaming
+    argument, a replayable source plus an idempotent sink: a crashed
+    batch replays with the same checkpoint-assigned id and rows, the
+    doc append is keyed ``idempotent_append``, each index commit is
+    fenced by its batch watermark, and the vacuum removes only rows
+    the live filter already drops. The write ORDER is each gate's: the
+    novelty probe does not exclude the batch's own rows, so its docs
+    land first (index-first, a replay would reject its own documents);
+    the fuzzy gates commit inside their admit, safe only because their
+    probes anti-join the batch's own ids."""
+    _check_gate_params(ttl_batches, compact_every)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        cached: list = []
+        try:
+            docs, commit_index = admit(batch_df, batch_id, cached)
+            idempotent_append(
+                docs, out_path, key_cols=[id_col], partition_cols=None,
+                batch_id=batch_id,
+            )
+            if commit_index is not None:
+                commit_index()
+        finally:
+            for df in cached:
+                df.unpersist()
+        if ttl_batches is not None and _due(batch_id, compact_every):
+            for table in index_tables:
+                _ttl_vacuum(
+                    batch_df.sparkSession, table, batch_id, ttl_batches, order_by
+                )
+
+    return _start(stream.writeStream.foreachBatch(sink), checkpoint, trigger)
+
+
+def novelty_gate_pipeline(
+    docs: DataFrame,
+    index_table: str,
+    out_path: str,
+    checkpoint: str,
+    trigger: dict | None = None,
+    ttl_batches: int | None = None,
+    compact_every: int = 8,
+) -> StreamingQuery:
+    """Incremental-ingest dedup gate: per micro-batch, pass through
+    only documents whose content fingerprint is NOT already in the
+    corpus index, then commit the survivors' fingerprints back into
+    the index — the streaming form of ext_incremental_dedup's probe,
+    closed into a loop (today's novel docs are tomorrow's index).
+
+    The index is a txn-table (streaming/txn.py) keyed on the 32-char
+    md5 digest: 32 bytes/doc of cross-batch memory, the same at 100 TB
+    as here; exactly-once comes from :func:`_gate_pipeline`.
+    Within-batch duplicates collapse to the lowest doc_id before the
+    probe, so a batch carrying two copies of a new document emits one.
+
+    ``ttl_batches`` bounds the state: the index rows become
+    (fingerprint, admit_batch), a fingerprint admitted at batch a
+    suppresses batches a+1 .. a+ttl and is then admitted again and
+    re-stamped, and every ``compact_every`` batches the sink vacuums
+    expired rows — index size is bounded by the TTL window's
+    distinct-content volume. This is the engine-grade form of the
+    reference's Redis expiry discipline (the EXPIRE 10 join buffer,
+    app/SaleDetailApp.scala:93,131, and the day-scoped dedup registry,
+    handler/DauHandler.scala:61-73). Expiry counts BATCHES
+    (deterministic under the test clock); a production gate keys the
+    same layout on an event-time watermark instead.
+    ``ttl_batches=None`` keeps the original unbounded fingerprint-only
+    index, byte-compatible with existing tables."""
+    from ..operators.dedup import novel_against_index
+
+    def admit(batch_df: DataFrame, batch_id: int, cached: list):
+        spark = batch_df.sparkSession
+        index = _live_index(spark, index_table, batch_id, ttl_batches)
+        if index is None:
+            index = spark.createDataFrame([], "fingerprint string")
+        # micro-batches take the inverted broadcast probe: the digest
+        # index — the side that grows at 100 TB — is scanned map-side,
+        # never shuffled or sorted. The batch is persisted around the
+        # whole sink: the plan-sizing count below then materializes it
+        # ONCE, instead of recomputing the source per downstream job —
+        # a parquet micro-batch made the count a metadata read, but a
+        # Kafka-style source would replay the whole batch for it.
+        batch_df = batch_df.persist()
+        cached.append(batch_df)
+        small = batch_df.count() <= GATE_BROADCAST_ROW_CAP
+        fresh = novel_against_index(
+            batch_df, index.select("fingerprint"), broadcast_probe=small
+        )
+        out = (
+            fresh.withColumn(
+                "__rn",
+                F.row_number().over(
+                    Window.partitionBy("fingerprint").orderBy("doc_id")
+                ),
+            )
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+            .persist()
+        )
+        cached.append(out)
+        n_admit = out.count()
+        # the probe sees this batch's own fingerprints once committed,
+        # so the commit runs after the doc append (see _gate_pipeline)
+        return out.drop("fingerprint"), lambda: _commit_index(
+            out.select("fingerprint"), index_table, batch_id,
+            ttl_batches, ["fingerprint"], n_rows=n_admit,
+        )
+
+    return _gate_pipeline(
+        docs, out_path, checkpoint, trigger, "doc_id", admit, [index_table],
+        ttl_batches, compact_every,
+    )
 
 
 def _gate_admit_ids(
@@ -1296,33 +1252,23 @@ def _gate_admit_ids(
     n_pairs = pairs.count()
     if n_pairs == 0:
         members = batch_df.select(id_col, F.col(id_col).alias("comp"))
-    elif n_pairs <= NEARDUP_GATE_CC_DRIVER_CAP:
-        # bounded graph: one collect + in-memory union-find beats
-        # several distributed jobs per min-label round; labels
-        # re-enter the plan as a (tiny) broadcastable frame
-        comp_map = _driver_union_find(pairs.select("i", "j").collect())  # collect-bound: <= NEARDUP_GATE_CC_DRIVER_CAP pairs
-        id_type = dict(batch_df.dtypes)[id_col]
-        labels = spark.createDataFrame(
-            list(comp_map.items()),
-            f"{id_col} {id_type}, component {id_type}",
-        )
-        members = (
-            batch_df.select(id_col)
-            .join(F.broadcast(labels), id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("component", F.col(id_col)).alias("comp"),
-            )
-        )
     else:
-        labels = comp_ops.connected_components(pairs.select("i", "j"))
-        members = (
-            batch_df.select(id_col)
-            .join(labels.withColumnRenamed("node", id_col), id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("component", F.col(id_col)).alias("comp"),
-            )
+        if n_pairs <= NEARDUP_GATE_CC_DRIVER_CAP:
+            # bounded graph: one collect + in-memory union-find beats
+            # several distributed jobs per min-label round; labels
+            # re-enter the plan as a (tiny) broadcastable frame
+            comp_map = _driver_union_find(pairs.select("i", "j").collect())  # collect-bound: <= NEARDUP_GATE_CC_DRIVER_CAP pairs
+            id_type = dict(batch_df.dtypes)[id_col]
+            labels = F.broadcast(spark.createDataFrame(
+                list(comp_map.items()),
+                f"{id_col} {id_type}, component {id_type}",
+            ))
+        else:
+            labels = comp_ops.connected_components(
+                pairs.select("i", "j")
+            ).withColumnRenamed("node", id_col)
+        members = batch_df.select(id_col).join(labels, id_col, "left").select(
+            id_col, F.coalesce("component", F.col(id_col)).alias("comp")
         )
     pairs.unpersist()
     if dup_ids is not None:
@@ -1372,23 +1318,14 @@ def neardup_gate_admit(
     subset of ``batch_df`` and commits the admitted documents' MinHash
     index rows (shingle-hash sets + band buckets).
 
-    ``ttl_batches`` bounds the state (round-8: the novelty gate's TTL
-    discipline extended to the fuzzy gates — previously the band/sig
-    tables grew without bound, the one unbounded-state path left in
-    continuous ingest): both index tables gain an ``admit_batch``
-    stamp, the probe sees only LIVE rows (admit_batch >= batch_id -
-    ttl_batches — an expired document stops suppressing near-dups of
-    its content, which is then re-admitted under its new doc_id), and
-    the pipeline vacuums expired rows every ``compact_every`` batches.
-    Unlike the exact gate there is no re-admission key collision:
-    re-served content always arrives under a fresh doc_id, so the
-    merge keys stay (doc_id) / (doc_id, band) and a replay re-stamps
-    identical values. Legacy stamp-less tables are migrated on first
-    probe (see :func:`_ttl_live_index`). ``ttl_batches=None`` keeps
-    the original unbounded index, byte-compatible with existing
-    tables; switching a TTL'd table back to unbounded mode is not
-    supported (the merges would write stamp-less rows into a stamped
-    schema).
+    ``ttl_batches`` bounds the state: both index tables carry the
+    ``admit_batch`` stamp of :func:`_commit_index` and the probe sees
+    only :func:`_live_index` rows, so an expired document stops
+    suppressing near-dups of its content, which is then re-admitted
+    under its new doc_id. ``ttl_batches=None`` keeps the original
+    unbounded index, byte-compatible with existing tables; switching a
+    TTL'd table back to unbounded mode is not supported (the commits
+    would write stamp-less rows into a stamped schema).
 
     Admission rule (deterministic): near-dup components are computed
     over the WHOLE batch (not just index survivors — that would make
@@ -1416,11 +1353,11 @@ def neardup_gate_admit(
     wrongly admitted) — regression-pinned by
     test_neardup_gate_chain_component_replay_is_noop. The index
     commits are ordered sigs-first so a crash between the two commits
-    leaves a discoverable-by-verify but not-yet-bucketed doc — the
-    replay re-commits both, and each table's append fence (or
-    merge_keyed, on the un-id'd backfill path) makes the repeats
-    no-ops. Cross-batch RE-DELIVERY of an already-admitted id at a NEW
-    batch id is out of contract engine-wide (the idempotent_append
+    leaves a discoverable-by-verify but not-yet-bucketed doc; the
+    replay re-commits both and each table's fence drops the repeat
+    (:func:`_commit_index`). Cross-batch RE-DELIVERY of an
+    already-admitted id at a NEW batch id is out of contract
+    engine-wide (the idempotent_append
     replay-guard assumption): on the non-TTL path it re-admits the doc
     and appends a second copy of its index rows — decision-neutral
     (probe sides dedupe) but unbounded storage under a chronically
@@ -1436,12 +1373,14 @@ def neardup_gate_admit(
     the COLLIDING ids' hash sets; batch text is tokenized ONCE (the
     persisted signature frame feeds both the cross-batch probe and the
     within-batch pair pass) and never shuffles."""
-    from ..operators import components as comp_ops
     from ..operators import neardup as nd_ops
-    from . import txn
 
-    _require_batch_id(ttl_batches, batch_id)
+    _check_gate_params(ttl_batches, batch_id=batch_id)
     spark = batch_df.sparkSession
+
+    def jaccard_at_least(a: str, b: str):
+        return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)) >= threshold
+
     # Spread the batch BEFORE the CPU-heavy signature pass: a
     # micro-batch often arrives as one file / one Kafka partition's
     # worth of rows = ONE scan partition, which serializes the 64-hash
@@ -1462,13 +1401,9 @@ def neardup_gate_admit(
         small = sigs.count() * bands <= GATE_BROADCAST_ROW_CAP
         banded = nd_ops.signature_bands(sigs, bands)
         dup_ids = None
-        if txn.current_version(bands_table) >= 0:
-            if ttl_batches is not None:
-                idx_bands = _ttl_live_index(spark, bands_table, batch_id, ttl_batches)
-                idx_sigs = _ttl_live_index(spark, sigs_table, batch_id, ttl_batches)
-            else:
-                idx_bands = txn.snapshot(spark, bands_table)
-                idx_sigs = txn.snapshot(spark, sigs_table)
+        idx_bands = _live_index(spark, bands_table, batch_id, ttl_batches)
+        if idx_bands is not None:
+            idx_sigs = _live_index(spark, sigs_table, batch_id, ttl_batches)
             # the batch's band frame broadcasts (micro-batch × bands
             # rows of 3 ints): the INDEX side of the bucket probe then
             # never shuffles — at 100 TB the band index is the side
@@ -1533,11 +1468,7 @@ def neardup_gate_admit(
             dup_ids = (
                 cand.join(sigs.select("doc_id", "hs"), "doc_id")
                 .join(idx_sigs_hit, "old_id")
-                .filter(
-                    F.size(F.array_intersect("hs", "old_hs"))
-                    / F.size(F.array_union("hs", "old_hs"))
-                    >= threshold
-                )
+                .filter(jaccard_at_least("hs", "old_hs"))
                 .select("doc_id")
                 .dropDuplicates()
             )
@@ -1574,11 +1505,7 @@ def neardup_gate_admit(
                 sigs.select(F.col("doc_id").alias("j"), F.col("hs").alias("hs_j")),
                 "j",
             )
-            .filter(
-                F.size(F.array_intersect("hs_i", "hs_j"))
-                / F.size(F.array_union("hs_i", "hs_j"))
-                >= threshold
-            )
+            .filter(jaccard_at_least("hs_i", "hs_j"))
             .select("i", "j")
         )
         admit_ids, members = _gate_admit_ids(batch_df, pairs, dup_ids)
@@ -1591,43 +1518,16 @@ def neardup_gate_admit(
             band_rows = banded.join(admit_ids, "doc_id").select(
                 "doc_id", "band", "bh"
             )
-            # under TTL the stamp joins the merge KEY (the novelty
-            # gate's discipline): an id re-admitted after its rows
-            # expired must insert a FRESH stamped row — keyed on the
-            # bare id, the insert-only merge would match the expired
-            # row, the stamp would never refresh, and the content
-            # would permanently stop suppressing its near-dups
-            # (round-8 review finding). Replays re-derive the same
-            # (id, admit_batch), so they stay no-ops.
-            sig_keys, band_keys = ["doc_id"], ["doc_id", "band"]
-            if ttl_batches is not None:
-                stamp = F.lit(batch_id).cast("long").alias("admit_batch")
-                sig_rows = sig_rows.select("*", stamp)
-                band_rows = band_rows.select("*", stamp)
-                sig_keys = sig_keys + ["admit_batch"]
-                band_keys = band_keys + ["admit_batch"]
-            if batch_id is not None and GATE_PROBE_FREE_INSERTS:
-                # probe-free inserts (txn.append_new): admitted rows
-                # are new-by-construction (their docs were not
-                # suppressed by this snapshot; under TTL the stamp
-                # joins the key), replays fenced by appended_through —
-                # TWO merge probes fewer per micro-batch (r8 verdict
-                # item 7). Un-id'd backfills keep the keyed merge.
-                # row counts are known without extra jobs: one sig row
-                # and ``bands`` band rows per admitted doc
-                txn.append_new(sig_rows, sigs_table, batch_id, n_rows=n_adm)
-                txn.append_new(
-                    band_rows, bands_table, batch_id, n_rows=n_adm * bands
-                )
-            else:
-                txn.merge_keyed(
-                    sig_rows, sigs_table, key_cols=sig_keys,
-                    broadcast_probe=small,
-                )
-                txn.merge_keyed(
-                    band_rows, bands_table, key_cols=band_keys,
-                    broadcast_probe=small,
-                )
+            # sigs first (see the docstring); the row counts are known
+            # without a job: one sig row and ``bands`` band rows per doc
+            _commit_index(
+                sig_rows, sigs_table, batch_id, ttl_batches, ["doc_id"],
+                n_rows=n_adm, broadcast_probe=small,
+            )
+            _commit_index(
+                band_rows, bands_table, batch_id, ttl_batches,
+                ["doc_id", "band"], n_rows=n_adm * bands, broadcast_probe=small,
+            )
         finally:
             members.unpersist()
         return admit
@@ -1655,36 +1555,25 @@ def neardup_gate_pipeline(
     EXACT fingerprint is new, pass documents that are not NEAR-dups
     (band collision + exact shingle-Jaccard >= threshold) of anything
     already admitted; survivors' signatures and band buckets join the
-    persisted index, closing the loop. Exactly-once with NO streaming
-    state: all cross-batch memory is the two txn index tables, the doc
-    sink is keyed idempotent_append, and full replays converge (see
-    :func:`neardup_gate_admit`). ``ttl_batches`` bounds both index
-    tables by the TTL window's admission volume (expiry + vacuum every
-    ``compact_every`` batches — see :func:`neardup_gate_admit`)."""
+    persisted index, closing the loop. All cross-batch memory is the
+    two txn index tables; full replays converge (see
+    :func:`neardup_gate_admit` and :func:`_gate_pipeline`).
+    ``ttl_batches`` bounds both index tables by the TTL window's
+    admission volume (expiry + vacuum every ``compact_every``
+    batches)."""
+    tables = [index_table + "_sigs", index_table + "_bands"]
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        admit = neardup_gate_admit(
-            batch_df, index_table + "_sigs", index_table + "_bands",
-            threshold, num_hashes, bands, shingle_n,
+    def admit(batch_df: DataFrame, batch_id: int, cached: list):
+        cached.append(neardup_gate_admit(
+            batch_df, *tables, threshold, num_hashes, bands, shingle_n,
             ttl_batches=ttl_batches, batch_id=batch_id,
-        )
-        try:
-            idempotent_append(
-                admit, out_path, key_cols=["doc_id"],
-                partition_cols=None, batch_id=batch_id,
-            )
-        finally:
-            admit.unpersist()
-        if (
-            ttl_batches is not None
-            and compact_every  # 0 = never vacuum (the sketch-pipeline convention)
-            and batch_id % compact_every == compact_every - 1
-        ):
-            _ttl_vacuum(spark, index_table + "_sigs", batch_id, ttl_batches)
-            _ttl_vacuum(spark, index_table + "_bands", batch_id, ttl_batches)
+        ))
+        return cached[0], None
 
-    return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)
+    return _gate_pipeline(
+        docs, out_path, checkpoint, trigger, "doc_id", admit, tables,
+        ttl_batches, compact_every,
+    )
 
 
 def overlap_gate_admit(
@@ -1751,9 +1640,8 @@ def overlap_gate_admit(
     fp) row but constant per doc, so vacuum expires whole documents
     at once — the live index never holds a partial fingerprint set."""
     from ..operators import text as text_ops
-    from . import txn
 
-    _require_batch_id(ttl_batches, batch_id)
+    _check_gate_params(ttl_batches, batch_id=batch_id)
     spark = batch_df.sparkSession
     # spread before the CPU-heavy fingerprint pass (the
     # neardup_gate_admit single-scan-partition trap)
@@ -1778,8 +1666,9 @@ def overlap_gate_admit(
         .select("doc_id", "fp")
         .distinct()
     )
+    not_stopped = ~F.col("fp").isin([int(f) for f in stop_fps or []])
     if stop_fps:
-        fps = fps.filter(~F.col("fp").isin([int(f) for f in stop_fps]))
+        fps = fps.filter(not_stopped)
     fps = fps.persist()
     try:
         # micro-batches broadcast their fingerprint/id frames so the
@@ -1811,14 +1700,11 @@ def overlap_gate_admit(
             .select("i", "j")
         )
         dup_ids = None
-        if txn.current_version(index_table) >= 0:
+        idx = _live_index(spark, index_table, batch_id, ttl_batches)
+        if idx is not None:
             # probe side: the index minus the batch's own ids (so
             # replays see what the original run saw) and minus the
             # frozen stoplist — both content-pure, never view-derived
-            if ttl_batches is not None:
-                idx = _ttl_live_index(spark, index_table, batch_id, ttl_batches)
-            else:
-                idx = txn.snapshot(spark, index_table)
             # batch ids and the batch's fp frame both broadcast
             # (when micro-batch-bounded): the fingerprint index — the
             # side that grows at 100 TB — never shuffles for the probe
@@ -1827,9 +1713,7 @@ def overlap_gate_admit(
                 F.broadcast(bids) if small else bids, "doc_id", "left_anti"
             )
             if stop_fps:
-                idx = idx.filter(
-                    ~F.col("fp").isin([int(f) for f in stop_fps])
-                )
+                idx = idx.filter(not_stopped)
             # evidence = DISTINCT shared fingerprints per (doc_id,
             # old_id): under the TTL'd (doc_id, fp, admit_batch) key, a
             # doc_id re-delivered while its rows are still live is
@@ -1870,34 +1754,15 @@ def overlap_gate_admit(
             # batch-side max_df rule is probe-time only — what is
             # locally common in one batch may be rare corpus-wide
             fp_rows = fps.join(admit_ids, "doc_id").select("doc_id", "fp")
-            fp_keys = ["doc_id", "fp"]
-            if ttl_batches is not None:
-                fp_rows = fp_rows.select(
-                    "*", F.lit(batch_id).cast("long").alias("admit_batch")
-                )
-                # stamp in the key: see neardup_gate_admit — an id
-                # re-admitted after expiry must refresh its stamp
-                fp_keys = fp_keys + ["admit_batch"]
-            if batch_id is not None and GATE_PROBE_FREE_INSERTS:
-                # probe-free insert: see neardup_gate_admit. n_rows
-                # must be the ACTUAL fp_rows count, not n_fps-if-
-                # admitted: an admitted set whose every fingerprint was
-                # stoplisted (or whose docs were too short to shingle)
-                # leaves fp_rows empty while n_adm>0, and a nonzero
-                # n_rows proxy would stage+commit an empty file set AND
-                # advance the fence — contradicting the round-9
-                # "suppressed batches commit nothing" rule (round-9
-                # advice). fp_rows joins two cached frames, so the
-                # count is a cheap job; 0 skips the commit entirely.
-                txn.append_new(
-                    fp_rows, index_table, batch_id,
-                    n_rows=fp_rows.count() if n_adm else 0,
-                )
-            else:
-                txn.merge_keyed(
-                    fp_rows, index_table, key_cols=fp_keys,
-                    broadcast_probe=small,
-                )
+            # n_rows is the ACTUAL fp_rows count, never n_adm: an
+            # admitted set whose every fingerprint was stoplisted (or
+            # whose docs were too short to shingle) leaves fp_rows empty,
+            # and a suppressed batch must commit nothing. None lets
+            # append_new count it; 0 skips the commit outright.
+            _commit_index(
+                fp_rows, index_table, batch_id, ttl_batches, ["doc_id", "fp"],
+                n_rows=None if n_adm else 0, broadcast_probe=small,
+            )
         finally:
             members.unpersist()
         return admit
@@ -1922,34 +1787,23 @@ def overlap_gate_pipeline(
     """Partial-overlap ingest gate: the winnowing-fingerprint member
     of the gate family (exact fingerprint -> novelty_gate_pipeline;
     whole-doc MinHash -> neardup_gate_pipeline; shared-run/quote
-    reuse -> here). Exactly-once with NO streaming state: cross-batch
-    memory is the (doc_id, fp) txn index, the doc sink is keyed
-    idempotent_append, and full replays converge (see
-    :func:`overlap_gate_admit`). ``ttl_batches`` bounds the index by
-    the TTL window's admission volume (expiry + vacuum every
+    reuse -> here). Cross-batch memory is the (doc_id, fp) txn index;
+    full replays converge (see :func:`overlap_gate_admit` and
+    :func:`_gate_pipeline`). ``ttl_batches`` bounds the index by the
+    TTL window's admission volume (expiry + vacuum every
     ``compact_every`` batches)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        admit = overlap_gate_admit(
+    def admit(batch_df: DataFrame, batch_id: int, cached: list):
+        cached.append(overlap_gate_admit(
             batch_df, index_table, k, w, min_shared, max_df, stop_fps,
             ttl_batches=ttl_batches, batch_id=batch_id,
-        )
-        try:
-            idempotent_append(
-                admit, out_path, key_cols=["doc_id"],
-                partition_cols=None, batch_id=batch_id,
-            )
-        finally:
-            admit.unpersist()
-        if (
-            ttl_batches is not None
-            and compact_every  # 0 = never vacuum (the sketch-pipeline convention)
-            and batch_id % compact_every == compact_every - 1
-        ):
-            _ttl_vacuum(spark, index_table, batch_id, ttl_batches)
+        ))
+        return cached[0], None
 
-    return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)
+    return _gate_pipeline(
+        docs, out_path, checkpoint, trigger, "doc_id", admit, [index_table],
+        ttl_batches, compact_every,
+    )
 
 
 def semantic_gate_admit(
@@ -2019,9 +1873,8 @@ def semantic_gate_admit(
         semantic_dedup_pairs,
         semantic_pairs_driver,
     )
-    from . import txn
 
-    _require_batch_id(ttl_batches, batch_id)
+    _check_gate_params(ttl_batches, batch_id=batch_id)
     spark = batch_df.sparkSession
     # ONE narrow pass per batch row pays the k centroid-distance folds
     # once and the norm fold once (review finding: assign + probe as
@@ -2050,22 +1903,17 @@ def semantic_gate_admit(
             <= SEMANTIC_GATE_BROADCAST_PROBE_CAP
             * SEMANTIC_GATE_PROBE_DIM_BUDGET
         )
-        have_index = txn.current_version(index_table) >= 0
-        idx = None
-        if have_index:
+        idx = _live_index(spark, index_table, batch_id, ttl_batches)
+        if idx is not None:
             # probe side: the index minus the batch's own ids (replays
             # see what the original run saw); under TTL, only LIVE
             # rows — an expired vector stops suppressing re-embeddings
-            # of its content (:func:`_ttl_live_index` semantics). The
+            # of its content (:func:`_live_index` semantics). The
             # batch's own ids leave via a BROADCAST anti-join (batch
             # ids are micro-batch-bounded; the index is the big side
             # and must never shuffle for a probe).
-            if ttl_batches is not None:
-                base = _ttl_live_index(spark, index_table, batch_id, ttl_batches)
-            else:
-                base = txn.snapshot(spark, index_table)
             bvids = batch_df.select("vec_id")
-            idx = base.join(
+            idx = idx.join(
                 F.broadcast(bvids) if fast else bvids, "vec_id", "left_anti"
             )
         # both probe paths apply the same 4dp-rounded threshold
@@ -2191,26 +2039,11 @@ def semantic_gate_admit(
             idx_rows = assigned.join(admit_ids, "vec_id").select(
                 "vec_id", "cluster", "embedding", "nrm"
             )
-            vec_keys = ["vec_id"]
-            if ttl_batches is not None:
-                idx_rows = idx_rows.select(
-                    "*", F.lit(batch_id).cast("long").alias("admit_batch")
-                )
-                # stamp in the key: see neardup_gate_admit — a vec_id
-                # re-admitted after expiry (re-embeddings often KEEP
-                # stable content-hash ids) must refresh its stamp
-                vec_keys = vec_keys + ["admit_batch"]
-            if batch_id is not None and GATE_PROBE_FREE_INSERTS:
-                # probe-free insert: see neardup_gate_admit; one index
-                # row per admitted vector, so the count is free
-                txn.append_new(
-                    idx_rows, index_table, batch_id, n_rows=n_adm
-                )
-            else:
-                txn.merge_keyed(
-                    idx_rows, index_table, key_cols=vec_keys,
-                    broadcast_probe=fast,
-                )
+            # one index row per admitted vector, so the count is free
+            _commit_index(
+                idx_rows, index_table, batch_id, ttl_batches, ["vec_id"],
+                n_rows=n_adm, broadcast_probe=fast,
+            )
         finally:
             if members is not None:
                 members.unpersist()
@@ -2234,41 +2067,26 @@ def semantic_gate_pipeline(
     """Semantic novelty ingest gate: the embedding member of the gate
     family (exact fingerprint -> novelty_gate_pipeline; whole-doc
     MinHash -> neardup_gate_pipeline; quote reuse -> overlap_gate;
-    paraphrase/near-semantic reuse -> here). Exactly-once with NO
-    streaming state: cross-batch memory is the (vec_id, cluster,
-    embedding, nrm) txn index, the vector sink is keyed
-    idempotent_append, and full replays converge (see
-    :func:`semantic_gate_admit`). ``ttl_batches`` bounds the index by
-    the TTL window's admission volume (expiry + vacuum every
-    ``compact_every`` batches) — at 100 TB the embedding payload makes
-    this the costliest of the gate indexes to leave unbounded."""
+    paraphrase/near-semantic reuse -> here). Cross-batch memory is the
+    (vec_id, cluster, embedding, nrm) txn index; full replays converge
+    (see :func:`semantic_gate_admit` and :func:`_gate_pipeline`).
+    ``ttl_batches`` bounds the index by the TTL window's admission
+    volume (expiry + vacuum every ``compact_every`` batches) — at
+    100 TB the embedding payload makes this the costliest of the gate
+    indexes to leave unbounded. The vacuum clusters the index by
+    ``cluster`` (see :func:`_ttl_vacuum`)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        admit = semantic_gate_admit(
+    def admit(batch_df: DataFrame, batch_id: int, cached: list):
+        cached.append(semantic_gate_admit(
             batch_df, index_table, centroids, threshold, nprobe,
             ttl_batches=ttl_batches, batch_id=batch_id,
-        )
-        try:
-            idempotent_append(
-                admit, out_path, key_cols=["vec_id"],
-                partition_cols=None, batch_id=batch_id,
-            )
-        finally:
-            admit.unpersist()
-        if (
-            ttl_batches is not None
-            and compact_every  # 0 = never vacuum (the sketch-pipeline convention)
-            and batch_id % compact_every == compact_every - 1
-        ):
-            # cluster-clustered rewrite: the probe scan's cluster
-            # filter then skips whole files via parquet min/max stats
-            _ttl_vacuum(
-                spark, index_table, batch_id, ttl_batches,
-                order_by=["cluster"],
-            )
+        ))
+        return cached[0], None
 
-    return _start(vectors.writeStream.foreachBatch(sink), checkpoint, trigger)
+    return _gate_pipeline(
+        vectors, out_path, checkpoint, trigger, "vec_id", admit,
+        [index_table], ttl_batches, compact_every, order_by=["cluster"],
+    )
 
 
 def semantic_gate_recluster(
@@ -2303,7 +2121,6 @@ def semantic_gate_recluster(
     the drift signal worth monitoring to schedule the next refresh.
     """
     from ..operators.similarity import ivf_probe_clusters
-    from . import txn
 
     v = txn.current_version(index_table)
     if v < 0:
@@ -2398,7 +2215,6 @@ def scd2_apply_batch(
     rewrites — :func:`scd2_apply_batch_bucketed` (round 8).
     """
     from ..operators import scd2 as scd2_ops
-    from . import txn
 
     spark = batch_df.sparkSession
     if (
@@ -2542,8 +2358,6 @@ def _scd2_obs_files_for(obs_table: str, buckets: list) -> list[str]:
     maintenance like compact_files — is conservatively included: an
     entry, when present, is always a superset of the buckets of the
     rows in its file, so pruning on it is lossless."""
-    from . import txn
-
     _v, names, meta = txn.snapshot_info(obs_table)
     fmap = meta.get("scd2_file_buckets", {})
     want = set(int(b) for b in buckets)
@@ -2580,8 +2394,6 @@ def _scd2_stage_grouped(
     narrow batch — stays job-free as before. A group with zero rows
     stages no file and gets no zone-map entry (no file, nothing to
     prune)."""
-    from . import txn
-
     span = SCD2_OBS_FILE_BUCKET_SPAN
     groups = [buckets[i : i + span] for i in range(0, len(buckets), span)]
     staged: list[str] = []
@@ -2639,8 +2451,6 @@ def _scd2_obs_merge(
     simply have no entry = never pruned. Uses txn's staging/commit
     internals — same package, same commit protocol, only the probe
     scope and meta differ."""
-    from . import txn
-
     # PRECONDITION: ``batch`` is key-unique — the apply dedupes
     # within-batch duplicates BEFORE persisting (txn.merge_keyed's
     # dropDuplicates semantics; without it two same-key observations
@@ -2723,8 +2533,6 @@ def scd2_obs_compact(
     silent missing-observation corruption, the exact class the layout
     stamp exists to stop. Run with no concurrent compactor, like
     txn.vacuum; concurrent writers are safe (lost CAS -> rebase)."""
-    from . import txn
-
     _scd2_layout_check(history_root, n_buckets)
     for _ in range(20):
         v, names, meta = txn.snapshot_info(obs_table)
@@ -2800,8 +2608,6 @@ def scd2_bucketed_history(
     fact-side enrichment path computes the fact keys' buckets with the
     shared expression and touches ONLY those tables (partition pruning
     by construction, no full-history scan)."""
-    from . import txn
-
     tables = scd2_bucket_tables(history_root)
     if buckets is not None:
         want = {f"bucket={int(b):05d}" for b in buckets}
@@ -2878,7 +2684,6 @@ def scd2_apply_batch_bucketed(
     each apply (a drifted caller would silently mis-route keys into
     duplicate history tables)."""
     from ..operators import scd2 as scd2_ops
-    from . import txn
 
     spark = batch_df.sparkSession
     _scd2_layout_check(history_root, n_buckets)
@@ -2986,12 +2791,9 @@ def scd2_bucketed_pipeline(
     form of :func:`scd2_pipeline` (see
     :func:`scd2_apply_batch_bucketed`)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scd2_apply_batch_bucketed(
-            batch_df, obs_table, history_root, key, ts_col, attr_cols,
-            tiebreak, batch_id, n_buckets,
-        )
-
+    sink = lambda b, i: scd2_apply_batch_bucketed(  # noqa: E731
+        b, obs_table, history_root, key, ts_col, attr_cols, tiebreak, i, n_buckets
+    )
     return _start(observations.writeStream.foreachBatch(sink), checkpoint, trigger)
 
 
@@ -3015,12 +2817,9 @@ def scd2_pipeline(
     enrichment, continuously, with late/out-of-order dim updates
     handled exactly (see :func:`scd2_apply_batch`)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scd2_apply_batch(
-            batch_df, obs_table, history_table,
-            key, ts_col, attr_cols, tiebreak, batch_id,
-        )
-
+    sink = lambda b, i: scd2_apply_batch(  # noqa: E731
+        b, obs_table, history_table, key, ts_col, attr_cols, tiebreak, i
+    )
     return _start(observations.writeStream.foreachBatch(sink), checkpoint, trigger)
 
 
@@ -3053,11 +2852,10 @@ def dsir_gate_pipeline(
     engine- and replay-stable."""
     from ..operators import importance as imp_ops
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scores = imp_ops.dsir_scores(batch_df, weights)
-        flagged = (
+    def flag(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select("doc_id")
-            .join(scores, "doc_id", "left")
+            .join(imp_ops.dsir_scores(batch_df, weights), "doc_id", "left")
             .select(
                 "doc_id",
                 F.coalesce("score_micro", F.lit(0)).cast("long").alias(
@@ -3069,11 +2867,8 @@ def dsir_gate_pipeline(
                 (F.col("score_micro") >= F.lit(threshold_micro)).cast("int"),
             )
         )
-        idempotent_append(
-            flagged, out_path, key_cols=["doc_id"], partition_cols=None,
-            batch_id=batch_id,
-        )
 
+    sink = _keyed_sink(out_path, ["doc_id"], transform=flag)
     return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)
 
 
@@ -3103,7 +2898,6 @@ def quality_gate_pipeline(
     ``txn.append_new``'s batch fence, so a replayed batch updates
     neither."""
     from ..operators.text import gopher_rules, hashed_classifier_score
-    from . import txn
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         flagged = gopher_rules(batch_df).withColumn(
@@ -3180,21 +2974,17 @@ def divergence_monitor_pipeline(
     reference, so the monitor needs NO streaming state and streaming
     output ≡ the batch operator on the same rows by construction. Replays
     are fenced by ``txn.append_new``'s batch watermark before any job
-    runs; rows are (batch_id, source, n_tokens, jsd4). Like every
+    runs; rows are (batch_id, source, n_tokens, jsd4) — a partials
+    table (:func:`_partials_sink`) that is never compacted. Like every
     monitor here it OBSERVES, it does not gate — routing on a drift
     alarm is the consumer's policy (the decontam convention).
     """
     from ..operators import vocab as vocab_ops
-    from . import txn
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        res = (
-            vocab_ops.reference_divergence(batch_df, ref)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .select("batch_id", "source", "n_tokens", "jsd4")
-        )
-        # probe-free insert: rows are keyed by THIS batch id; the
-        # per-source frame is source-cardinality-bounded
-        txn.append_new(res, counts_table, batch_id)
-
+    sink = _partials_sink(
+        counts_table, None, None,
+        lambda b: vocab_ops.reference_divergence(b, ref).select(
+            "source", "n_tokens", "jsd4"
+        ),
+    )
     return _start(docs.writeStream.foreachBatch(sink), checkpoint, trigger)

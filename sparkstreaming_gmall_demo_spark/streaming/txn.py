@@ -368,8 +368,8 @@ def append_new(
     if "appended_through" not in meta0 and current_version(table) >= 0:
         seeded_probe = True
         # Fence seeding (round-10): a table whose prior commits all came
-        # through merge_keyed (pre-probe-free history, or flipping
-        # GATE_PROBE_FREE_INSERTS False->True mid-life) carries no
+        # through merge_keyed (pre-probe-free history, or a backfill
+        # without batch ids before the stream started) carries no
         # appended_through, so a crash-replay of the LAST keyed-path
         # batch would sail past the fence and re-insert its rows —
         # additive readers (count-min cells, monitor counts, bm25

@@ -478,6 +478,47 @@ def test_split_cutoffs_validates_fractions():
         split_cutoffs({"a": 0.5, "b": 0.6})
 
 
+def test_curation_bundle_matches_keep_best_and_dedup_aware_split(spark):
+    """The fused curation_bundle equals the unfused composition on a
+    small labeled frame: per split, the docs dedup_aware_split assigns
+    there, their distinct leakage groups, and how many of them
+    keep_best keeps (score ties break on the lower id)."""
+    from sparkstreaming_gmall_demo_spark.operators.components import (
+        connected_components,
+        keep_best,
+    )
+    from sparkstreaming_gmall_demo_spark.operators.sampling import (
+        curation_bundle,
+        dedup_aware_split,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, 100 + (i * 7) % 5) for i in range(40)], "doc_id long, n_chars long"
+    )
+    # components {0,1,2} (a chain), {3,4}, {10,11,12,13}, {20,30}; the
+    # rest are singletons. n_chars repeats every 5 ids, so groups tie.
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (3, 4), (10, 11), (11, 12), (12, 13), (20, 30)],
+        "i long, j long",
+    )
+    splits = {"train": 0.5, "val": 0.25, "test": 0.25}
+    labels = connected_components(pairs, unique_pairs=True)
+    kept = {r.doc_id for r in keep_best(docs, labels, "n_chars").collect()}
+    want: dict = {}
+    for r in dedup_aware_split(docs, labels, splits).collect():
+        n_docs, groups, n_kept = want.get(r.split, (0, set(), 0))
+        want[r.split] = (
+            n_docs + 1, groups | {r.group_key}, n_kept + (r.doc_id in kept)
+        )
+    want = {s: (n, len(g), k) for s, (n, g, k) in want.items()}
+    got = {
+        r.split: (r.n_docs, r.n_groups, r.n_kept)
+        for r in curation_bundle(docs, pairs, splits).collect()
+    }
+    assert len(want) > 1 and sum(n for n, _, _ in want.values()) == 40
+    assert got == want
+
+
 def test_stratified_sample_rates_and_determinism(spark):
     from sparkstreaming_gmall_demo_spark.operators.sampling import (
         stratified_sample,

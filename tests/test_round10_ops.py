@@ -2,7 +2,7 @@
 
 Regression pins for the r9 ADVICE findings: (1) append_new seeds its
 replay fence on a table whose prior commits came via merge_keyed (a
-pre-probe-free table, or flipping GATE_PROBE_FREE_INSERTS on) — the
+pre-probe-free table, or a backfill without batch ids) — the
 unfenced crash-replay of the last keyed-path batch must not re-insert
 and double additive readers' counts; (2) the overlap gate commits
 nothing when the admitted docs contribute ZERO index fingerprints
@@ -81,7 +81,6 @@ def test_append_new_seeds_fence_after_merge_keyed_history(spark, tmp_path):
     assert txn.merge_keyed(b5, t, ["batch_id", "v"]) == 2
     assert "appended_through" not in txn.table_meta(t)
     # crash-replay of batch 5 arrives on the probe-free path
-    # (GATE_PROBE_FREE_INSERTS flipped on between the runs)
     assert txn.append_new(b5, t, batch_id=5) == 0
     assert txn.snapshot(spark, t).count() == 2  # NOT doubled
     # the replay committed nothing, so the fence is still unseeded;

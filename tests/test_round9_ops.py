@@ -14,8 +14,8 @@ TTL vacuum carries table meta forward.
 Round-9 feature pins: the SCD2 obs-log zone map (round-8 log
 compatibility incl. late-arrival resurrection from unmapped files,
 pruned rebuild reads, replay no-op), txn.append_new's replay
-fence/meta contract and the commit-mode admission-equivalence of the
-GATE_PROBE_FREE_INSERTS ablation switch, the centroid-drift loop end
+fence/meta contract and the gates' probe-free index commits over a
+TTL re-admission, the centroid-drift loop end
 to end (occupancy skew -> recluster -> probe-cost recovery at held
 recall), and the driver-window rotation policy recomputed from the
 committed CORRECTNESS ledger."""
@@ -478,15 +478,10 @@ def test_append_new_fences_replays_and_carries_meta(spark, tmp_path):
     assert txn.append_new(df, table, batch_id=2, n_rows=2) == 0  # fenced
 
 
-@pytest.mark.parametrize("probe_free", [True, False])
-def test_gate_admissions_identical_across_commit_modes(
-    spark, tmp_path, monkeypatch, probe_free
-):
-    """The GATE_PROBE_FREE_INSERTS ablation switch must be admission-
-    invariant: the probe-free (append_new) and merge_keyed commit
-    paths produce the same admitted set and the same index contents
-    over a stream with dups, TTL expiry, and a re-admission — the
-    contract bench_streaming's within-run ablation relies on."""
+def test_gate_admissions_with_probe_free_commits(spark, tmp_path):
+    """The probe-free (append_new) index commits give the expected
+    admitted set and index contents over a stream with dups, TTL
+    expiry, and a re-admission."""
     topic = tmp_path / "docs"
     _stage_batches(
         topic,
@@ -498,7 +493,6 @@ def test_gate_admissions_identical_across_commit_modes(
             [(4, _doc_text(0))],   # doc 0 expired (ttl=2) -> re-admitted
         ],
     )
-    monkeypatch.setattr(pipelines, "GATE_PROBE_FREE_INSERTS", probe_free)
     q = pipelines.novelty_gate_pipeline(
         _doc_stream(spark, topic), str(tmp_path / "idx"),
         str(tmp_path / "admitted"), str(tmp_path / "ck"),
@@ -509,7 +503,7 @@ def test_gate_admissions_identical_across_commit_modes(
     assert got == {0, 1, 3, 4}
     idx = txn.snapshot(spark, str(tmp_path / "idx"))
     # post-vacuum at b3 (ttl=2): stamps >= 1 live -> doc 3 (b2) and the
-    # re-admitted doc 4 (b3); the expired b0 stamps are gone in both modes
+    # re-admitted doc 4 (b3); the expired b0 stamps are gone
     assert {(r.fingerprint is not None, r.admit_batch) for r in idx.collect()} == {
         (True, 2),
         (True, 3),
