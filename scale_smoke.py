@@ -197,19 +197,15 @@ def main() -> None:
                                 query_vec_id=1, k=10, depth=50)
             .agg(F.count("*").alias("n"), F.sum("rrf").alias("s"))
         ), r)
-        # asymmetric containment via the contained-side prefix filter,
-        # over trigram SHINGLES — the element space where the filter's
-        # rare-element assumption holds on this corpus (measured df:
-        # unigrams/bigrams of the ~30-token generator vocabulary have
-        # median df 285 — every prefix probe hits a hot posting list
-        # and the candidate join degenerates toward all-pairs, which
-        # hung the first smoke attempt; trigram median df is 9).
-        # Shingles are also the semantically right space for quote
-        # detection (quotes preserve order). At 10x every doc's 9
-        # verbatim twins are mutual containments: a ~990x output
-        # blowup (505 -> 500,500 ordered pairs) the filter must absorb.
+        # asymmetric containment through the exact posting self-join,
+        # over trigram SHINGLES — quotes preserve order, and trigram
+        # postings stay short on this corpus (median df 9; unigrams and
+        # bigrams of the ~30-token generator vocabulary sit at median
+        # df 285). At 10x every doc's 9 verbatim twins are mutual
+        # containments: a ~990x output blowup (505 -> 500,500 ordered
+        # pairs) the join must absorb.
         timed("containment", lambda: (
-            nd_ops.prefix_filtered_containment_pairs(
+            nd_ops.array_containment_pairs(
                 nd_ops.shingle_sets(dc, 3), 0.9
             ).agg(F.count("*").alias("pairs"))
         ), r)

@@ -2,118 +2,84 @@
 dedup pipeline needs AFTER pair generation: transitively-linked
 near-dups form one group, from which one canonical document is kept.
 
-Algorithm: iterative min-label propagation. Every node starts labeled
-with its own id; each round every node takes the minimum label among
-itself and its neighbors; fixpoint = components labeled by their
-minimum member id. Near-dup graphs are dense little clusters with tiny
-diameters, so convergence takes a handful of rounds; each round is one
-shuffle join + one aggregation, and ``localCheckpoint`` truncates the
-growing lineage so round N's plan does not replay rounds 1..N-1.
-For long-chain graphs (diameter past tens) the large-star/small-star
-variant below (``connected_components_star``) converges in O(log n)
-rounds instead of O(diameter) — same join/agg primitives, same output
-contract, property-tested equivalent on random graphs.
+One operator, two engines, one output contract ((node, component =
+minimum member id)):
+
+- Edge lists that fit a 4 MB driver budget (16 bytes of (i, j) longs
+  per edge, ``DRIVER_EDGE_CAP``) are collected once and solved by a
+  union-find on the driver. Near-dup graphs are small (a
+  verbatim-duplicate 12.5k-doc micro-batch yields ~10k pairs), and a
+  distributed algorithm pays a blocking job per round whose fixed
+  cost dwarfs the work (Chukonu, VLDB'21: per-job overhead dominates
+  small Spark jobs).
+- Larger graphs run large-star/small-star rounds (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC 2014), which
+  converge in O(log n) rounds even on long chains.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+_log = logging.getLogger(__name__)
+
+# 4 MB of (i, j) longs: two orders of magnitude above the declared
+# micro-batch graphs, and far below the size at which driver Row
+# objects become a memory risk. Above it the star rounds run instead
+# (pinned by tests/test_neardup_gate.py::
+# test_neardup_gate_distributed_cc_fallback).
+DRIVER_EDGE_CAP = 4 * 1024 * 1024 // 16
+
+
+def union_find(pair_rows) -> dict:
+    """{node: component} over (i, j) pairs, component = the minimum
+    member id regardless of edge order: the smaller root always wins
+    the union, so the final root of every tree is its minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in pair_rows:
+        ra, rb = find(r[0]), find(r[1])
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {node: find(node) for node in list(parent)}
+
 
 def connected_components(
-    pairs: DataFrame, src: str = "i", dst: str = "j", max_iter: int = 50,
-    unique_pairs: bool = False,
+    pairs: DataFrame, src: str = "i", dst: str = "j", max_iter: int = 50
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``;
     ``component`` = the minimum node id of its connected component.
     Nodes with no edges don't appear (singletons are trivially their
     own component — callers union them in if needed).
 
-    Each round is ONE job: the previous round's label rides the union
-    as a tagged self-row, so the min-label aggregation also knows the
-    old label, and the convergence signal (count of nodes whose label
-    changed) is collected by an ``observe`` metric DURING the job that
-    materializes the round's labels — no separate join + count action
-    (that second action per round doubled driver latency, which is the
-    term that multiplies at scale, not the per-row cost).
-
-    Round 1 is FUSED into label initialization: from the identity
-    labeling, one propagation round computes exactly
-    min(node, min(neighbors)) — a plain aggregate over the edge list —
-    so the loop starts from that frame and the first join+checkpoint
-    round is dropped outright (guide §2.4; one fewer blocking job per
-    call). ``unique_pairs=True`` lets callers whose pair frame is
-    already distinct (any groupBy-produced pair kernel) skip the edge
-    ``distinct`` — one fewer exchange inside the edge checkpoint; it
-    is a pure cost toggle, duplicate edges never change the fixpoint.
-
-    Each materialized job executes TWO propagation steps (r12, guide
-    §1.2 "the distributed algorithm"): near-dup graphs converge in a
-    handful of rounds, and the blocking localCheckpoint + observation
-    read per job is the dominant per-round term, so pairing steps
-    halves the job count. Both steps observe their changed-count in
-    the same job; the loop stops when the SECOND step changed nothing
-    (step 1's output was already the fixpoint, and one extra min-label
-    step at a fixpoint is the identity, so the returned frame is that
-    fixpoint). Checkpointing every second step keeps lineage depth
-    bounded at two rounds — the standard iterate-k-then-materialize
-    trade every Pregel-style engine makes.
-
-    ``max_iter`` is an upper bound on TOTAL propagation steps
-    including the fused init round (r13, ADVICE r12: the r12 loop
-    bound over-ran odd caps by up to two steps); with step-pairing the
-    executed count is the largest odd number <= max_iter, and because
-    the init round is fused into labeling, max_iter < 1 still executes
-    that one round (identity labels are never returned).
-    """
-
-    def _step(labels, edges, observe_change):
-        nbr = edges.join(
-            labels.select(F.col("node").alias("b"), "label"), "b"
-        ).select(F.col("a").alias("node"), "label")
-        folded = (
-            labels.select("node", "label", F.lit(1).alias("is_self"))
-            .union(nbr.select("node", "label", F.lit(0).alias("is_self")))
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                # every node has exactly one self-row, so this is the
-                # previous round's label for the change comparison
-                F.max(F.when(F.col("is_self") == 1, F.col("label"))).alias("_old"),
-            )
+    One bounded collect fetches at most ``DRIVER_EDGE_CAP`` + 1 edges.
+    If they all fit, the labels come from :func:`union_find` as a
+    local frame typed like ``src``; otherwise ``max_iter`` bounds the
+    star rounds, and a WARNING is logged if they stop there
+    unconverged."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    e = pairs.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+    rows = e.limit(DRIVER_EDGE_CAP + 1).collect()  # collect-bound: <= DRIVER_EDGE_CAP + 1 edges
+    if len(rows) <= DRIVER_EDGE_CAP:
+        id_type = dict(pairs.dtypes)[src]
+        return pairs.sparkSession.createDataFrame(
+            list(union_find(rows).items()),
+            f"node {id_type}, component {id_type}",
         )
-        obs = None
-        if observe_change:
-            # only the job's LAST step observes: an intermediate
-            # step's frame feeds two consumers (self-rows + nbr join),
-            # and a duplicated observe node would fire twice
-            obs = Observation()
-            folded = folded.observe(
-                obs,
-                F.sum(
-                    (F.col("label") != F.col("_old")).cast("long")
-                ).alias("changed"),
-            )
-        return folded.select("node", "label"), obs
-
-    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    if not unique_pairs:
-        edges = edges.distinct()
-    edges = edges.localCheckpoint()
-    labels = edges.groupBy(F.col("a").alias("node")).agg(
-        F.least(F.col("node"), F.min("b")).alias("label")
-    )
-    for _ in range(max(0, (max_iter - 1) // 2)):
-        stepped, _ = _step(labels, edges, observe_change=False)
-        stepped2, obs2 = _step(stepped, edges, observe_change=True)
-        # eager localCheckpoint runs the paired steps as one job; both
-        # observations are then available without another action
-        labels = stepped2.localCheckpoint()
-        if (obs2.get["changed"] or 0) == 0:
-            break
-    return labels.select("node", F.col("label").alias("component"))
+    return _star_components(e, max_iter)
 
 
 def _star_phase(sym_edges: DataFrame, large: bool) -> DataFrame:
@@ -121,8 +87,7 @@ def _star_phase(sym_edges: DataFrame, large: bool) -> DataFrame:
     (a, b). m(a) = min(N(a) ∪ {a}); large-star re-points every
     strictly-larger neighbor at m, small-star re-points the smaller
     neighbors (and a itself) at m. Each phase is one groupBy + one
-    join + one distinct — the same shuffle primitives as a min-label
-    round."""
+    join + one distinct."""
     mins = sym_edges.groupBy("a").agg(F.min("b").alias("mb"))
     mins = mins.select("a", F.least("a", "mb").alias("m"))
     joined = sym_edges.join(mins, "a")
@@ -137,40 +102,24 @@ def _star_phase(sym_edges: DataFrame, large: bool) -> DataFrame:
     return out.filter(F.col("x") != F.col("y")).distinct()
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "i",
-    dst: str = "j",
-    max_iter: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014) — same contract as
-    ``connected_components`` ((node, component = min member id) for
-    every node in ``pairs``), different convergence behavior: each
-    round roughly halves label-tree depth, so long chains converge in
-    O(log n) rounds where min-label propagation needs O(diameter).
-    Swap in when component diameters grow past tens; on the dense
-    little clusters near-dup graphs produce, min-label's cheaper
-    rounds win.
+def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
+    """Large-star/small-star alternation over an (x, y) edge frame.
+    Each round roughly halves label-tree depth, so a chain of n nodes
+    converges in O(log n) rounds.
 
     Convergence = the edge set reaches the fixpoint of both phases
     (stars centered at component minima), detected by an ``observe``d
     (count, order-insensitive xxhash fold) signature on the round's
-    single materializing job. Pass ``stats`` to receive
-    ``{"rounds": n}`` (the long-chain depth tests pin the log bound).
-    """
-    e = pairs.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+    single materializing job."""
+    e = e.distinct().localCheckpoint()
     nodes = (
         e.select(F.col("x").alias("node"))
         .union(e.select(F.col("y").alias("node")))
         .distinct()
     )
-    edges = e.filter(F.col("x") != F.col("y")).distinct().localCheckpoint()
+    edges = e.filter(F.col("x") != F.col("y"))
     prev_sig = None
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         sym = edges.union(
             edges.select(F.col("y").alias("x"), F.col("x").alias("y"))
         ).selectExpr("x as a", "y as b")
@@ -191,8 +140,12 @@ def connected_components_star(
         if sig == prev_sig:
             break
         prev_sig = sig
-    if stats is not None:
-        stats["rounds"] = rounds
+    else:
+        _log.warning(
+            "connected_components: star rounds stopped at max_iter=%d "
+            "before converging; some components may be split",
+            max_iter,
+        )
     star = edges.select(F.col("x").alias("node"), F.col("y").alias("label"))
     return nodes.join(star, "node", "left").select(
         "node", F.coalesce("label", "node").alias("component")

@@ -1,4 +1,4 @@
-"""Near-duplicate detection: exact token-set Jaccard, MinHash+LSH,
+"""Near-duplicate detection: exact set similarity, MinHash+LSH,
 SimHash — the large-scale training-data dedup family.
 
 All signature computation is built-in Column expressions (xxhash64,
@@ -13,10 +13,16 @@ Scale design:
 - Verification joins candidate pairs back to token sets by doc id —
   two broadcast-or-shuffle hash joins on narrow keys.
 
-Exact pairwise Jaccard (token_jaccard_pairs) is O(n^2) in the worst
-case and exists as (a) the verification kernel and (b) the oracle-
-checkable declared query on a bounded partition (per-language). The
-scale path is minhash_near_duplicates.
+The exact kernels (Jaccard, containment, the threshold sweep) share
+one posting self-join, ``_posting_pairs``: O(n^2) in the worst case,
+they are the verification kernels and the oracle-checkable declared
+queries on a bounded partition (per-language). Against a bucket-pair
+kernel and a ppjoin prefix filter (token and bigram sets, sf0.01 and
+sf0.1, 4 cores) it was as fast or faster in every case, by up to 3.4x
+and 20x, with identical output. Its weak spot is a corpus of verbatim
+copies: at 10x duplication scale_smoke.py's trigram containment case
+takes 129 s where the prefix filter took 52 s. The scale path is
+minhash_near_duplicates.
 """
 
 from __future__ import annotations
@@ -38,162 +44,31 @@ def token_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     )
 
 
-def token_jaccard_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """All pairs (i < j) with token-set Jaccard >= threshold."""
-    return array_jaccard_pairs(token_sets(df, id_col, text_col), threshold)
+def _check_threshold(threshold: float) -> None:
+    """The posting join never pairs disjoint sets, so a threshold <= 0
+    (which every disjoint pair meets) would silently undercount."""
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
 
 
-def array_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
-    """All pairs (i < j) of ``sets`` rows (doc_id, toks: array) with
-    set Jaccard >= threshold — works over any element space (tokens,
-    n-gram shingles, hashes).
-
-    Exact algorithm: explode (doc, token), self-join on token to count
-    intersections (only co-occurring pairs materialize — sparse, not a
-    cross join), then |A ∪ B| = |A| + |B| − |A ∩ B|.
-
-    Kernel choice (measured at sf0.1, lang partition): this posting
-    self-join streams a hot element's pairs straight through map-side
-    partial aggregation, so it wins on skewed element spaces — unigram
-    tokens with stopword-like frequencies (1.3 s vs 4.6 s for
-    bucket_jaccard_pairs). On bounded-frequency spaces (n-gram
-    shingles) bucket_jaccard_pairs wins instead; see its docstring.
+def _posting_pairs(sets: DataFrame) -> DataFrame:
+    """(i, j, inter, szi, szj) for every pair i < j of ``sets`` rows
+    (doc_id, toks: array of distinct elements) sharing at least one
+    element: explode (doc, element), self-join on the element and
+    count (only co-occurring pairs materialize — sparse, not a cross
+    join). A hot element's pairs stream straight through map-side
+    partial aggregation.
 
     Set sizes ride through the posting join (8 bytes/row) instead of
     joining back to a separate sizes frame: sz is functionally
     dependent on doc_id, so grouping by (i, szi, j, szj) produces the
     identical pair frame while the plan drops two joins and two full
-    scan+tokenize passes (guide §2.3/§2.4 — 4 corpus scans -> 2). The
-    self-join sides stay lazy: unigram tokenization is cheap enough
-    that re-computing it per side beats a blocking materialization
-    (measured; the expensive SHINGLE space gets the localCheckpoint in
-    array_containment_pairs / the prefix-filtered kernels instead).
-    """
+    scan+tokenize passes."""
     posting = sets.select(
         "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("token")
     )
     a, b = posting.alias("a"), posting.alias("b")
-    inter = (
-        a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("i"),
-            F.col("a.sz").alias("szi"),
-            F.col("b.doc_id").alias("j"),
-            F.col("b.sz").alias("szj"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
     return (
-        inter.select(
-            "i",
-            "j",
-            (F.col("inter") / (F.col("szi") + F.col("szj") - F.col("inter"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("i", "j", F.round("jaccard", 4).alias("jaccard"))
-    )
-
-
-def bucket_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
-    """Same contract and output as array_jaccard_pairs, different
-    physical strategy: group postings by token and generate each
-    token's co-occurring doc pairs with in-row array combinatorics
-    (the _bucket_pairs trick), counting pair occurrences = |A ∩ B|.
-    Sizes ride through the explode, so the plan is ONE pass over the
-    token arrays and two shuffles (token bucket, pair count) — no
-    self-join, no size joins.
-
-    Wins when element frequencies are bounded (n-gram shingles:
-    2.7 s vs 4.2 s for the self-join at sf0.1) because the arrays are
-    computed once and only ids+sizes shuffle. Loses on skewed spaces:
-    a hot element materializes its full |bucket|^2/2 pair array in one
-    row before exploding, where the self-join streams those pairs
-    through partial aggregation (tokens: 4.6 s vs 1.3 s). Callers pick
-    by element space; the prefix-filtered variant below is the scale
-    path when even the sparse pair count blows up.
-    """
-    posting = sets.select(
-        "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("token")
-    )
-    buckets = (
-        posting.groupBy("token")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "sz"))).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, k) -> "
-                "transform(slice(ds, k + 2, size(ds)), y -> struct(x, y))))"
-            )
-        ).alias("p")
-    )
-    inter = pairs.groupBy(
-        F.col("p.x.doc_id").alias("i"),
-        F.col("p.x.sz").alias("sa"),
-        F.col("p.y.doc_id").alias("j"),
-        F.col("p.y.sz").alias("sb"),
-    ).agg(F.count("*").alias("inter"))
-    return (
-        inter.select(
-            "i",
-            "j",
-            (F.col("inter") / (F.col("sa") + F.col("sb") - F.col("inter"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("i", "j", F.round("jaccard", 4).alias("jaccard"))
-    )
-
-
-def token_containment_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Asymmetric containment pairs over token sets — see
-    :func:`array_containment_pairs`."""
-    return array_containment_pairs(token_sets(df, id_col, text_col), threshold)
-
-
-def array_containment_pairs(sets: DataFrame, threshold: float) -> DataFrame:
-    """All ORDERED pairs (contained, container) with set containment
-    |A ∩ B| / |A| >= threshold — the asymmetric complement of Jaccard
-    dedup: a short document quoted inside a long one scores near-1
-    containment but low Jaccard (the union is dominated by the long
-    doc), so symmetric dedup never sees it. Quote/snippet reuse
-    detection is exactly this query (Broder's containment measure,
-    "On the resemblance and containment of documents", 1997).
-
-    Exact kernel, same shape as array_jaccard_pairs: one posting
-    self-join counts each unordered pair's intersection ONCE, then both
-    directions are emitted with their own denominators and filtered —
-    no second join pass for the flipped direction. This is the
-    verification/oracle kernel on a bounded partition; the scale path
-    is :func:`prefix_filtered_containment_pairs` — NOT the MinHash
-    band index, whose collision probability is driven by JACCARD: a
-    10-token quote inside a 100-token page has containment 1.0 but
-    Jaccard 0.1 and essentially never band-collides, exactly the pair
-    this operator exists to find.
-
-    Set sizes ride through the posting join instead of joining back to
-    a separate sizes frame (same restructure as array_jaccard_pairs:
-    sz is functionally dependent on doc_id, so the pair frame is
-    identical while the plan drops two joins and two scan+shingle
-    passes, guide §2.3/§2.4). The remaining two posting branches (the
-    self-join sides) consume a localCheckpoint-ed ``sets`` so the
-    shingle arrays are computed once, not per side."""
-    sets = sets.localCheckpoint()
-    posting = sets.select(
-        "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("token")
-    )
-    a, b = posting.alias("a"), posting.alias("b")
-    sized = (
         a.join(
             b,
             (F.col("a.token") == F.col("b.token"))
@@ -208,6 +83,56 @@ def array_containment_pairs(sets: DataFrame, threshold: float) -> DataFrame:
         .agg(F.count("*").alias("inter"))
         .select("i", "j", "inter", "szi", "szj")
     )
+
+
+def token_jaccard_pairs(
+    df: DataFrame,
+    threshold: float,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """All pairs (i < j) with token-set Jaccard >= threshold."""
+    return array_jaccard_pairs(token_sets(df, id_col, text_col), threshold)
+
+
+def array_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
+    """All pairs (i < j) of ``sets`` rows (doc_id, toks: array) with
+    set Jaccard >= threshold — works over any element space (tokens,
+    n-gram shingles, hashes). |A ∪ B| = |A| + |B| − |A ∩ B| over the
+    posting join's counts.
+
+    The self-join sides stay lazy: unigram tokenization is cheap enough
+    that re-computing it per side beats a blocking materialization
+    (measured; callers over an expensive shingle space materialize
+    ``sets`` first, as array_containment_pairs does)."""
+    _check_threshold(threshold)
+    jac = F.col("inter") / (F.col("szi") + F.col("szj") - F.col("inter"))
+    return (
+        _posting_pairs(sets)
+        .filter(jac >= threshold)
+        .select("i", "j", F.round(jac, 4).alias("jaccard"))
+    )
+
+
+def array_containment_pairs(sets: DataFrame, threshold: float) -> DataFrame:
+    """All ORDERED pairs (contained, container) with set containment
+    |A ∩ B| / |A| >= threshold — the asymmetric complement of Jaccard
+    dedup: a short document quoted inside a long one scores near-1
+    containment but low Jaccard (the union is dominated by the long
+    doc), so symmetric dedup never sees it. Quote/snippet reuse
+    detection is exactly this query (Broder's containment measure,
+    "On the resemblance and containment of documents", 1997). The
+    MinHash band index cannot serve it: its collision probability is
+    driven by JACCARD, and a 10-token quote inside a 100-token page
+    has containment 1.0 but Jaccard 0.1.
+
+    The posting join counts each unordered pair's intersection ONCE;
+    both directions are emitted with their own denominators and
+    filtered — no second join pass for the flipped direction. The two
+    self-join sides consume a localCheckpoint-ed ``sets`` so the
+    shingle arrays are computed once, not per side."""
+    _check_threshold(threshold)
+    sized = _posting_pairs(sets.localCheckpoint())
     fwd = sized.select(
         F.col("i").alias("contained"),
         F.col("j").alias("container"),
@@ -224,199 +149,6 @@ def array_containment_pairs(sets: DataFrame, threshold: float) -> DataFrame:
         .select(
             "contained", "container", F.round("containment", 4).alias("containment")
         )
-    )
-
-
-def _check_prefix_threshold(threshold: float) -> None:
-    """The prefix length |X| - ceil(t·|X|) + 1 is a valid, sound prefix
-    only for t in (0, 1]: above 1 the slice length goes negative inside
-    a Spark job, and at 0 the prefix cannot find pairs sharing nothing."""
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-
-
-def prefix_filtered_containment_pairs(
-    sets: DataFrame, threshold: float
-) -> DataFrame:
-    """Same contract and output as :func:`array_containment_pairs`,
-    with the ppjoin prefix filter adapted to the ASYMMETRIC measure —
-    the scale path for quote/snippet detection, where the naive
-    posting join's sum(freq²) blowup on common tokens dominates.
-
-    Theorem (containment prefix): order every set by one global
-    canonical order; if |A ∩ B| / |A| >= t, then the prefix of length
-    |A| - ceil(t·|A|) + 1 of A shares at least one element with B
-    (drop the whole prefix and the remaining |A| - prefix < t·|A|
-    elements cannot reach the bound even if all hit). Only the
-    CONTAINED side gets a prefix — the container must stay complete
-    (a containing superset has no obligation to share A's rare
-    elements in ITS prefix). With canonical order = ascending global
-    frequency, the contained side's prefix holds its RAREST tokens, so
-    the candidate join probes only short posting lists even though the
-    container side is unrestricted — that asymmetry is what makes the
-    filter effective where the symmetric ppjoin prefix would be
-    unsound here.
-
-    Candidates are verified exactly on the full arrays; both
-    directions of every unordered pair are considered independently
-    (A's prefix against all of B, and B's prefix against all of A).
-
-    Element-space guidance (measured at 10x scale smoke): the filter's
-    effectiveness rests on the contained side having genuinely RARE
-    elements. Over unigram tokens of a templated/small-vocabulary
-    corpus every "rare" token still has a long posting list and the
-    candidate join degenerates toward all-pairs; over word n-gram
-    shingles (n >= 2) frequencies stay bounded and the filter holds —
-    and shingles are the semantically right space for quote/snippet
-    detection anyway, since quotes preserve token ORDER that bag-of-
-    unigram containment ignores.
-
-    ``sets`` is localCheckpoint-ed up front (r12): the plan consumes
-    it from FOUR branches (prefix posting, container posting, and the
-    two verification sides), and without materialization each branch
-    re-runs the scan + shingle + distinct — the dominant per-task cost
-    (guide §2.4/§5; measured 4.4 s -> 2.6 s at sf0.1). localCheckpoint
-    stores MEMORY_AND_DISK, so at corpus scale this is one shingle
-    pass plus a disk round-trip instead of four shingle passes — the
-    same materialize-vs-recompute trade the worked example in guide §8
-    makes for its fingerprint table. (The eager materialization trades
-    executor-loss recoverability for the saved passes — the explicit
-    judgement jaccard_threshold_sweep's persist() note documents;
-    these kernels keep localCheckpoint because their returned plan is
-    lazy, so a persist() here could never be unpersisted and its
-    canonicalized-plan cache entry would leak across callers.)
-
-    Prefix derivation (r13, VERDICT r12 item 4): the r12 shape ranked
-    every posting row with a per-doc ``row_number`` window over a
-    global-frequency join — a full (doc, f, tok) sort per partition
-    and a skew magnet on hot documents at scale. Frequencies now come
-    from a count-over-token-partition window on the SAME posting pass
-    (no separate freq aggregate, no join), and the per-doc prefix is
-    an in-row ``sort_array`` + ``slice`` after a hash aggregate:
-    identical prefix set ((f, tok) pairs are unique within a doc, so
-    the L smallest under lexicographic (f, tok) order are exactly the
-    window's rn <= L rows), one fewer posting branch, and no per-doc
-    sort-window anywhere in the plan."""
-    from pyspark.sql.window import Window
-
-    _check_prefix_threshold(threshold)
-    sets = sets.localCheckpoint()
-    posting = sets.select(
-        "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("tok")
-    )
-    tokf = posting.withColumn(
-        "f", F.count("*").over(Window.partitionBy("tok"))
-    )
-    plen = (
-        F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + F.lit(1)
-    ).cast("int")
-    prefix = (
-        tokf.groupBy("doc_id", "sz")
-        .agg(F.sort_array(F.collect_list(F.struct("f", "tok"))).alias("ft"))
-        .select(
-            "doc_id",
-            "sz",
-            F.explode(
-                F.slice(F.col("ft").getField("tok"), F.lit(1), plen)
-            ).alias("tok"),
-        )
-    )
-    a, b = prefix.alias("a"), posting.alias("b")
-    # size bound: |A∩B| <= |B|, so containment >= t forces
-    # |B| >= ceil(t·|A|) — prune undersized containers inside the
-    # candidate join, before the dedup shuffle and exact verification
-    cands = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (F.col("b.sz") >= F.ceil(F.lit(threshold) * F.col("a.sz"))),
-        )
-        .select(
-            F.col("a.doc_id").alias("contained"),
-            F.col("b.doc_id").alias("container"),
-        )
-        .dropDuplicates(["contained", "container"])
-    )
-    sa = sets.select(F.col("doc_id").alias("contained"), F.col("toks").alias("ta"))
-    sb = sets.select(F.col("doc_id").alias("container"), F.col("toks").alias("tb"))
-    verified = cands.join(sa, "contained").join(sb, "container").select(
-        "contained",
-        "container",
-        (F.size(F.array_intersect("ta", "tb")) / F.size("ta")).alias(
-            "containment"
-        ),
-    )
-    return verified.filter(F.col("containment") >= threshold).select(
-        "contained", "container", F.round("containment", 4).alias("containment")
-    )
-
-
-def prefix_filtered_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard pairs with ppjoin-style prefix filtering.
-
-    Theorem (prefix filter): order every set by one global canonical
-    order; if J(A, B) >= t then the prefixes of length
-    |X| - ceil(t * |X|) + 1 of A and B share at least one element. So
-    the candidate join runs only on prefixes — and with the canonical
-    order = ascending global frequency, prefixes hold each doc's
-    RAREST elements, so posting lists in the join are short where the
-    corpus is dense. Candidates are then verified exactly on the full
-    arrays.
-
-    vs the naive posting join (array_jaccard_pairs): same output, but
-    the quadratic blowup on frequent shingles is filtered out before
-    it materializes. The filter costs three extra shuffles (frequency
-    join, prefix window, candidate dedup), so it LOSES below ~10^3
-    docs (measured: 12 s vs 4 s at 702 docs) and pays off only when
-    posting lists grow long enough that the naive join's sum(cnt^2)
-    blowup dominates — which is exactly the 100 TB regime.
-
-    ``sets`` is localCheckpoint-ed up front — same four-consumer
-    materialization rationale (and the same recoverability-trade note)
-    as prefix_filtered_containment_pairs, whose r13 prefix derivation
-    (count-over-token window + in-row sort/slice instead of a freq
-    join + per-doc row_number window) this shares.
-    """
-    from pyspark.sql.window import Window
-
-    _check_prefix_threshold(threshold)
-    sets = sets.localCheckpoint()
-    posting = sets.select("doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("tok"))
-    tokf = posting.withColumn(
-        "f", F.count("*").over(Window.partitionBy("tok"))
-    )
-    plen = (
-        F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + F.lit(1)
-    ).cast("int")
-    prefix = (
-        tokf.groupBy("doc_id", "sz")
-        .agg(F.sort_array(F.collect_list(F.struct("f", "tok"))).alias("ft"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.slice(F.col("ft").getField("tok"), F.lit(1), plen)
-            ).alias("tok"),
-        )
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cands = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"))
-        .dropDuplicates(["i", "j"])
-    )
-    sa = sets.select(F.col("doc_id").alias("i"), F.col("toks").alias("ta"))
-    sb = sets.select(F.col("doc_id").alias("j"), F.col("toks").alias("tb"))
-    verified = cands.join(sa, "i").join(sb, "j").select(
-        "i",
-        "j",
-        (
-            F.size(F.array_intersect("ta", "tb"))
-            / F.size(F.array_union("ta", "tb"))
-        ).alias("jaccard"),
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "i", "j", F.round("jaccard", 4).alias("jaccard")
     )
 
 
@@ -473,12 +205,9 @@ def minhash_signature(df: DataFrame, num_hashes: int = 64, shingle_n: int = 3,
     long-input hashing, ~10x cheaper than re-hashing the shingle string
     per seed.
     """
-    hs = shingle_hashes(df, shingle_n, id_col, text_col)
-    sig = F.expr(
-        "transform(sequence(0, {h} - 1), "
-        "seed -> array_min(transform(hs, h -> xxhash64(h, seed))))".format(h=num_hashes)
+    return signature_from_hash_sets(
+        shingle_hashes(df, shingle_n, id_col, text_col), num_hashes
     )
-    return hs.select("doc_id", "hs", sig.alias("signature"))
 
 
 # Hot-bucket bound for _bucket_pairs: buckets larger than this are
@@ -566,10 +295,11 @@ def signature_bands(
     sigs: DataFrame, bands: int = 16, payload_cols: tuple = ()
 ) -> DataFrame:
     """(doc_id, *payload, band, bh): the LSH banding of a signature
-    frame — band hash = xxhash64 fold of the band's signature slice,
-    the same expression lsh_candidate_pairs / minhash_near_duplicates
-    inline. Exposed so an INDEX of admitted documents' buckets can be
-    persisted and probed incrementally (streaming near-dup gate)."""
+    frame — band hash = xxhash64 fold of the band's signature slice;
+    rows_per_band = H / bands, so P[candidate] follows the standard
+    (1 - (1 - j^r)^b) S-curve. Shared by minhash_near_duplicates and
+    the streaming near-dup gate, whose persisted INDEX of admitted
+    documents' buckets is probed incrementally."""
     return sigs.select(
         "doc_id",
         *payload_cols,
@@ -585,35 +315,6 @@ def signature_bands(
     ).select(
         "doc_id", *payload_cols,
         F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"),
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 16,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Band the signature; docs sharing any band bucket become a
-    candidate pair. rows_per_band = H / bands; P[candidate] follows the
-    standard (1 - (1 - j^r)^b) S-curve. Band hash = xxhash64 fold of
-    the band's slice.
-    """
-    banded = signatures.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands} - 1), "
-                f"b -> named_struct('band', b, 'bh', "
-                f"aggregate(slice(signature, b * (size(signature) div {bands}) + 1, "
-                f"size(signature) div {bands}), cast(b as bigint), "
-                f"(acc, x) -> xxhash64(acc, x))))"
-            )
-        ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    return (
-        _bucket_pairs(banded, [F.col("doc_id")], max_bucket=max_bucket)
-        .select(F.col("p.x.doc_id").alias("i"), F.col("p.y.doc_id").alias("j"))
-        .dropDuplicates(["i", "j"])
     )
 
 
@@ -809,7 +510,7 @@ def jaccard_threshold_sweep(
     conditional sums don't.
 
     One pass by construction (the ext_oov_sweep discipline): the
-    posting-join pair kernel (array_jaccard_pairs' plan) runs once at
+    posting-join pair kernel (_posting_pairs) runs once at
     min(thresholds); every per-threshold statistic is a conditional
     sum over the surviving pair frame, and the per-doc frame is one
     explode of the pair endpoints aggregated to each doc's best
@@ -840,34 +541,10 @@ def jaccard_threshold_sweep(
         raise ValueError("thresholds_bp must be positive basis points")
     t_min = ts[0] / 10000.0
 
-    sets = token_sets(df, id_col, text_col)
-    # sizes ride through the posting join (array_jaccard_pairs
-    # restructure): two joins and two scan+tokenize passes dropped
-    posting = sets.select(
-        "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("token")
-    )
-    a, b = posting.alias("a"), posting.alias("b")
+    jac = F.col("inter") / (F.col("szi") + F.col("szj") - F.col("inter"))
     pairs = (
-        a.join(
-            b,
-            (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("i"),
-            F.col("a.sz").alias("szi"),
-            F.col("b.doc_id").alias("j"),
-            F.col("b.sz").alias("szj"),
-        )
-        .agg(F.count("*").alias("inter"))
-        .select(
-            "i",
-            "j",
-            (
-                F.col("inter")
-                / (F.col("szi") + F.col("szj") - F.col("inter"))
-            ).alias("jac"),
-        )
+        _posting_pairs(token_sets(df, id_col, text_col))
+        .select("i", "j", jac.alias("jac"))
         .filter(F.col("jac") >= t_min)
     )
     # Both aggregate branches hang off the pair frame, so it is

@@ -54,13 +54,12 @@ _STALE_R8 = [
 ]
 
 _STALE_R9 = [
-    # newest driver-green row is r9 (first 22 of 47, name order)
+    # newest driver-green row is r9 (first 22 of 46, name order)
     "ext_bm25_indexed",
     "ext_bpe_encode",
     "ext_bpe_train",
     "ext_codebook_occupancy",
     "ext_containment_pairs",
-    "ext_containment_pairs_filtered",
     "ext_contamination_report",
     "ext_contrastive_pairs",
     "ext_corpus_mix",
@@ -77,6 +76,7 @@ _STALE_R9 = [
     "ext_heavy_hitters",
     "ext_incremental_dedup",
     "ext_ivf_topk",
+    "ext_kcenter_coreset",
 ]
 
 _DRIVER_WINDOW = _CORE_SENTINELS + _NEVER_SEATED + _STALE_R8 + _STALE_R9

@@ -198,21 +198,15 @@ def ext_ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_fixture(load_table(spark, sf_dir, "documents")).filter(
         (F.col("lang") == JACCARD_LANG) & (F.size(F.split("text", " ")) >= 2)
     )
-    # bigram shingles have bounded frequencies, so the bucket-pair
-    # kernel wins here (tokens with stopword skew use the posting
-    # self-join instead; prefix_filtered_jaccard_pairs is the path for
-    # larger corpora with long posting lists) — see kernel docstrings.
-    # The shingle-set frame is localCheckpoint-ed (r13, VERDICT r12
-    # item 3): without it the bucket kernel's explode infers
-    # size(toks) > 0 / isnotnull(toks) predicates that Catalyst pushes
-    # BELOW the spread exchange, re-evaluating the whole
+    # The shingle-set frame is localCheckpoint-ed: both posting-join
+    # sides consume it, and without it the explode's inferred
+    # size(toks) > 0 / isnotnull(toks) predicates are pushed BELOW
+    # the spread exchange, re-evaluating the whole
     # tokenize+shingle+distinct expression on the single-partition
-    # fixture scan (the plan's Filter node carried the shingle CASE
-    # twice) — the materialization makes the shingle pass run exactly
-    # once, parallel, the same trade its containment siblings made in
-    # r12 (guide §2.4/§5).
+    # fixture scan. The materialization runs the shingle pass exactly
+    # once, in parallel, as array_containment_pairs does.
     sets = nd_ops.shingle_sets(docs, 2).localCheckpoint()
-    return nd_ops.bucket_jaccard_pairs(sets, 0.5).orderBy("i", "j")
+    return nd_ops.array_jaccard_pairs(sets, 0.5).orderBy("i", "j")
 
 
 MINHASH_SHINGLE_N = 3
@@ -930,11 +924,11 @@ def ext_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ext_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs -> transitive clusters, each labeled by its minimum doc id
-    (operators/components.py min-label propagation; the oracle states
+    (operators/components.py:connected_components; the oracle states
     the same fixpoint as a recursive transitive closure)."""
     docs = spread_fixture(load_table(spark, sf_dir, "documents")).filter(F.col("lang") == JACCARD_LANG)
     pairs = nd_ops.token_jaccard_pairs(docs, JACCARD_THRESHOLD)
-    labels = comp_ops.connected_components(pairs, unique_pairs=True)
+    labels = comp_ops.connected_components(pairs)
     return (
         labels.groupBy("component")
         .agg(F.count("*").alias("size"))
@@ -3853,7 +3847,7 @@ def ext_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang") == JACCARD_LANG
     )
     pairs = nd_ops.token_jaccard_pairs(docs, JACCARD_THRESHOLD)
-    labels = comp_ops.connected_components(pairs, unique_pairs=True)
+    labels = comp_ops.connected_components(pairs)
     docs_plain = load_table(spark, sf_dir, "documents").filter(
         F.col("lang") == JACCARD_LANG
     )
@@ -3936,7 +3930,7 @@ def ext_keep_best_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang") == JACCARD_LANG
     )
     pairs = nd_ops.token_jaccard_pairs(docs, JACCARD_THRESHOLD)
-    labels = comp_ops.connected_components(pairs, unique_pairs=True)
+    labels = comp_ops.connected_components(pairs)
     docs_plain = load_table(spark, sf_dir, "documents").filter(
         F.col("lang") == JACCARD_LANG
     )
@@ -3987,7 +3981,7 @@ def ext_curation_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, ext_keep_best_dedup, and ext_leakage_safe_splits each
     re-derive the exact-Jaccard pair graph as independent declared
     entries; a real pipeline computes it ONCE. This entry derives the
-    pairs once, localCheckpoints the shared label frame, and emits the
+    pairs once, labels their components once, and emits the
     per-split accounting for BOTH consumers (leakage groups + keep-
     best survivors) — the bench row is the evidence the shared path
     costs one graph derivation, not three."""
@@ -4004,10 +3998,8 @@ def ext_curation_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return samp_ops.curation_bundle(docs_plain, pairs, SPLITS, score_col="n_chars")
 
 
-# Shared by ext_containment_pairs (exact kernel) and
-# ext_containment_pairs_filtered (prefix-filtered scale kernel): the two
-# builds are proven pair-identical (tests/test_neardup.py), so one
-# brute-force oracle gates both.
+# Brute-force containment oracle: every pair of bigram-shingle sets,
+# both directions, exact denominators.
 _CONTAINMENT_ORACLE = f"""
     WITH d AS (
         SELECT doc_id,
@@ -4055,43 +4047,13 @@ def ext_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed pairs at sf0.1 vs the meaningful shingle set). One
     posting self-join counts each unordered pair's intersection ONCE;
     both directions are emitted with their own denominators. Exact
-    kernel on the bounded language partition — the corpus-scale path
-    is prefix_filtered_containment_pairs (the asymmetric ppjoin
-    adaptation: prefix on the contained side only, proven
-    pair-identical by test_neardup.py; MinHash banding cannot serve
-    here — band collisions track Jaccard, which is ~0.1 for exactly
-    the quote-in-page pairs this operator exists to find)."""
+    kernel on the bounded language partition. MinHash banding cannot
+    serve here: band collisions track Jaccard, which is ~0.1 for
+    exactly the quote-in-page pairs this operator exists to find."""
     docs = spread_fixture(load_table(spark, sf_dir, "documents")).filter(
         (F.col("lang") == JACCARD_LANG) & (F.size(F.split("text", " ")) >= 2)
     )
     return nd_ops.array_containment_pairs(
-        nd_ops.shingle_sets(docs, 2), CONTAINMENT_THRESHOLD
-    ).orderBy("contained", "container")
-
-
-@_register(
-    "ext_containment_pairs_filtered",
-    _CONTAINMENT_ORACLE,
-    "prefix-filtered containment pairs: the ppjoin-style kernel that survives 100x",
-)
-def ext_containment_pairs_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALE kernel for quote/snippet containment, driver-gated
-    against the same brute-force oracle as ext_containment_pairs
-    (operators/neardup.py:prefix_filtered_containment_pairs): order
-    each set by ascending global element frequency; a contained set A
-    with |A∩B|/|A| >= t must share one of its first
-    |A| - ceil(t|A|) + 1 (= rarest) elements with B, so the candidate
-    join probes only the short posting lists of rare shingles — never
-    all pairs. Candidates verify exactly on the full arrays. This is
-    the entry a user should reach first at corpus scale (6.8x wall at
-    10x data under a 990x output blowup, SCALE_SMOKE); the exact
-    kernel remains as the oracle baseline. Plan pin (no posting
-    self-join without the prefix row_number filter) in
-    tests/test_neardup.py."""
-    docs = spread_fixture(load_table(spark, sf_dir, "documents")).filter(
-        (F.col("lang") == JACCARD_LANG) & (F.size(F.split("text", " ")) >= 2)
-    )
-    return nd_ops.prefix_filtered_containment_pairs(
         nd_ops.shingle_sets(docs, 2), CONTAINMENT_THRESHOLD
     ).orderBy("contained", "container")
 
@@ -4488,7 +4450,7 @@ def ext_dup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang") == JACCARD_LANG
     )
     pairs = nd_ops.token_jaccard_pairs(docs, JACCARD_THRESHOLD)
-    labels = comp_ops.connected_components(pairs, unique_pairs=True)
+    labels = comp_ops.connected_components(pairs)
     docs_plain = load_table(spark, sf_dir, "documents").filter(
         F.col("lang") == JACCARD_LANG
     )
@@ -5002,7 +4964,7 @@ def ext_cluster_capped_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang") == JACCARD_LANG
     )
     pairs = nd_ops.token_jaccard_pairs(docs, JACCARD_THRESHOLD)
-    labels = comp_ops.connected_components(pairs, unique_pairs=True)
+    labels = comp_ops.connected_components(pairs)
     docs_plain = load_table(spark, sf_dir, "documents").filter(
         F.col("lang") == JACCARD_LANG
     )
@@ -6105,7 +6067,7 @@ def _minhash_twin_labels(
         spread, threshold=JACCARD_THRESHOLD, shingle_n=MINHASH_SHINGLE_N
     ).select("i", "j")
     plain = _docs(load_table(spark, sf_dir, "documents"))
-    return plain, comp_ops.connected_components(pairs, unique_pairs=True)
+    return plain, comp_ops.connected_components(pairs)
 
 
 @_register(

@@ -906,28 +906,13 @@ def compact_boilerplate_dictionary(spark: SparkSession, gram_table: str) -> int:
 # many verification candidates per probe doc (see neardup_gate_admit).
 NEARDUP_GATE_CAND_CAP = 64
 
-# Within-batch component collapse: pair graphs up to this size are
-# solved by a driver-side union-find (micro-batch near-dup graphs are
-# tiny — a verbatim-duplicate 12.5k-doc batch yields ~10k pairs — and
-# the iterative DataFrame algorithm pays several JOBS per round, the
-# gate's dominant fixed cost); larger graphs fall back to the
-# distributed connected_components. The cap is budgeted in BYTES
-# (r13, VERDICT r12 item 3 / item 8: the old 1M-pair row cap was an
-# aggressive ~16 MB of raw longs per micro-batch — several times that
-# once materialized as driver Row objects): 16 bytes of (i, j) longs
-# per pair against a 4 MB driver budget = 250k pairs, still two
-# orders of magnitude above the declared micro-batch graphs, and the
-# distributed fallback engages above it (pinned by
-# tests/test_neardup_gate.py::test_neardup_gate_distributed_cc_fallback).
-NEARDUP_GATE_CC_DRIVER_BUDGET_BYTES = 4 * 1024 * 1024
-NEARDUP_GATE_CC_DRIVER_CAP = NEARDUP_GATE_CC_DRIVER_BUDGET_BYTES // 16
-
 # Semantic gate cross-batch probe: up to this many (vector, probed
 # cluster) rows are collected and broadcast for the map-only BLAS
 # index scan (operators/similarity.py:cosine_match_scan) — 200k rows
-# of 64-dim doubles is ~100 MB, the same bounded-collect class as the
-# union-find cap above. Bigger batches (a misconfigured trigger) fall
-# back to the distributed probe join instead of OOMing the driver.
+# of 64-dim doubles is ~100 MB, the same bounded-collect class as
+# components.DRIVER_EDGE_CAP. Bigger batches (a misconfigured
+# trigger) fall back to the distributed probe join instead of OOMing
+# the driver.
 # The collect's true size scales with rows x nprobe x DIMENSION, not
 # rows alone (round-8 advice: 200k rows of 4096-dim embeddings is
 # multiple GB), so the gate budgets in ELEMENTS — this row cap times
@@ -952,30 +937,6 @@ GATE_BROADCAST_ROW_CAP = 1_000_000
 # forever because nothing ever called txn.vacuum (which needs a
 # writer quiesce this long-running-gate context can't provide).
 GATE_ORPHAN_AGE_S = 3600.0
-
-
-def _driver_union_find(pair_rows) -> dict[int, int]:
-    """Min-label union-find over collected (i, j) pairs: same contract
-    as operators.components.connected_components (component = minimum
-    member id), chosen deterministically regardless of edge order —
-    the smaller root always wins the union, so the final root of every
-    tree is its component's minimum."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in pair_rows:
-        ra, rb = find(r[0]), find(r[1])
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    return {node: find(node) for node in list(parent)}
 
 
 def _live_index(spark, table: str, batch_id, ttl_batches):
@@ -1247,30 +1208,14 @@ def _gate_admit_ids(
     admit semi-join and index merges off it, then unpersists it."""
     from ..operators import components as comp_ops
 
-    spark = batch_df.sparkSession
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-    if n_pairs == 0:
-        members = batch_df.select(id_col, F.col(id_col).alias("comp"))
-    else:
-        if n_pairs <= NEARDUP_GATE_CC_DRIVER_CAP:
-            # bounded graph: one collect + in-memory union-find beats
-            # several distributed jobs per min-label round; labels
-            # re-enter the plan as a (tiny) broadcastable frame
-            comp_map = _driver_union_find(pairs.select("i", "j").collect())  # collect-bound: <= NEARDUP_GATE_CC_DRIVER_CAP pairs
-            id_type = dict(batch_df.dtypes)[id_col]
-            labels = F.broadcast(spark.createDataFrame(
-                list(comp_map.items()),
-                f"{id_col} {id_type}, component {id_type}",
-            ))
-        else:
-            labels = comp_ops.connected_components(
-                pairs.select("i", "j")
-            ).withColumnRenamed("node", id_col)
-        members = batch_df.select(id_col).join(labels, id_col, "left").select(
-            id_col, F.coalesce("component", F.col(id_col)).alias("comp")
-        )
-    pairs.unpersist()
+    # within-batch components: a driver union-find for graphs under
+    # the 4 MB edge budget, the distributed star rounds above it
+    labels = comp_ops.connected_components(
+        pairs.select("i", "j")
+    ).withColumnRenamed("node", id_col)
+    members = batch_df.select(id_col).join(labels, id_col, "left").select(
+        id_col, F.coalesce("component", F.col(id_col)).alias("comp")
+    )
     if dup_ids is not None:
         members = members.join(
             dup_ids.withColumn("_dup", F.lit(True)), id_col, "left"
@@ -1864,6 +1809,7 @@ def semantic_gate_admit(
     run embedding_health (operators/similarity.py) upstream to
     quarantine malformed producers.
     """
+    from ..operators.components import union_find
     from ..operators.similarity import (
         NORM,
         DOT,
@@ -1975,7 +1921,7 @@ def semantic_gate_admit(
             # are their own component), survivor = min id among the
             # component's NOT-index-rejected members, admitted iff
             # survivor
-            comp_map = _driver_union_find(pair_rows)
+            comp_map = union_find(pair_rows)
             comp_members: dict = {}
             for r in rows:
                 comp_members.setdefault(

@@ -22,6 +22,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import StreamingQueryException
 
+from sparkstreaming_gmall_demo_spark.operators import components as comp_ops
 from sparkstreaming_gmall_demo_spark.operators import neardup as nd_ops
 from sparkstreaming_gmall_demo_spark.streaming import pipelines, txn
 
@@ -208,10 +209,11 @@ def test_gate_crash_restart_matches_uninterrupted_run(
 @pytest.mark.parametrize(
     "call, param",
     [
-        (lambda: nd_ops.prefix_filtered_jaccard_pairs(None, 0.0), "threshold"),
-        (lambda: nd_ops.prefix_filtered_jaccard_pairs(None, 1.5), "threshold"),
-        (lambda: nd_ops.prefix_filtered_containment_pairs(None, 0.0), "threshold"),
-        (lambda: nd_ops.prefix_filtered_containment_pairs(None, 1.01), "threshold"),
+        (lambda: nd_ops.array_jaccard_pairs(None, 0.0), "threshold"),
+        (lambda: nd_ops.array_jaccard_pairs(None, -0.5), "threshold"),
+        (lambda: nd_ops.array_containment_pairs(None, 0.0), "threshold"),
+        (lambda: nd_ops.array_containment_pairs(None, -1.0), "threshold"),
+        (lambda: comp_ops.connected_components(None, max_iter=0), "max_iter"),
         (lambda: pipelines.novelty_gate_pipeline(
             None, "i", "o", "c", ttl_batches=0), "ttl_batches"),
         (lambda: pipelines.overlap_gate_pipeline(

@@ -224,44 +224,3 @@ def test_lsh_persisted_index_partition_prunes(spark, sf_dir, tmp_path):
     # Hamming<=1 probe reaches at most prefix_bits+1 of 2^prefix_bits
     # prefixes; the IN-list in the filter must reflect that bound
     assert "IN (" in pf.upper() or "in (" in pf, pf
-
-
-def test_prefix_filtered_jaccard_equals_naive(spark, sf_dir):
-    """Prefix filtering must lose no pairs (exactness of the ppjoin
-    prefix bound) across thresholds."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "de")
-    sets = nd.shingle_sets(docs, 2)
-    for t in (0.3, 0.5, 0.8):
-        naive = {(r.i, r.j, r.jaccard) for r in nd.array_jaccard_pairs(sets, t).collect()}
-        fast = {(r.i, r.j, r.jaccard) for r in nd.prefix_filtered_jaccard_pairs(sets, t).collect()}
-        assert fast == naive, f"threshold {t}"
-
-
-def test_prefix_filtered_containment_equals_naive(spark, sf_dir):
-    """The containment-adapted prefix filter (prefix on the CONTAINED
-    side only, container unrestricted) must lose no ordered pairs
-    across thresholds — exactness of the asymmetric prefix bound."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "de")
-    for sets in (nd.token_sets(docs), nd.shingle_sets(docs, 2)):
-        for t in (0.5, 0.9):
-            naive = {
-                (r.contained, r.container, r.containment)
-                for r in nd.array_containment_pairs(sets, t).collect()
-            }
-            fast = {
-                (r.contained, r.container, r.containment)
-                for r in nd.prefix_filtered_containment_pairs(sets, t).collect()
-            }
-            assert fast == naive, f"threshold {t}"
-
-
-def test_bucket_jaccard_equals_selfjoin(spark, sf_dir):
-    """The two exact kernels are physical variants of the same
-    operator: identical output on both element spaces (unigram tokens
-    and bigram shingles), across thresholds."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "de")
-    for sets in (nd.token_sets(docs), nd.shingle_sets(docs, 2)):
-        for t in (0.5, 0.8):
-            a = {(r.i, r.j, r.jaccard) for r in nd.array_jaccard_pairs(sets, t).collect()}
-            b = {(r.i, r.j, r.jaccard) for r in nd.bucket_jaccard_pairs(sets, t).collect()}
-            assert a == b, f"threshold {t}"

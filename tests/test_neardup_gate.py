@@ -9,6 +9,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import functions as F
 
+from sparkstreaming_gmall_demo_spark.operators import components as comp_ops
 from sparkstreaming_gmall_demo_spark.operators import neardup as nd_ops
 from sparkstreaming_gmall_demo_spark.streaming import pipelines, txn
 
@@ -182,16 +183,13 @@ def test_neardup_gate_survives_index_compaction_midstream(spark, tmp_path):
     assert bands.count() == len(admitted_ids) * BANDS
 
 
-def test_driver_union_find_matches_distributed_components(spark):
-    """The gate's bounded-graph fast path (driver union-find) must
-    produce the identical (node -> min member id) labeling as the
-    distributed connected_components it replaces — pinned on a graph
-    with chains, a cycle, disjoint comps, and duplicate/reversed
-    edges, under several shuffled edge orders (the labeling must be
-    edge-order independent)."""
+def test_driver_union_find_matches_distributed_components(spark, monkeypatch):
+    """The bounded-graph fast path (driver union-find) must produce the
+    identical (node -> min member id) labeling as the distributed star
+    fallback — pinned on a graph with chains, a cycle, disjoint comps,
+    and duplicate/reversed edges, under several shuffled edge orders
+    (the labeling must be edge-order independent)."""
     import random
-
-    from sparkstreaming_gmall_demo_spark.operators import components as comp_ops
 
     edges = [
         (5, 3), (3, 9), (9, 5),          # cycle -> min 3
@@ -205,7 +203,8 @@ def test_driver_union_find_matches_distributed_components(spark):
     for _ in range(4):
         shuffled = list(edges)
         rng.shuffle(shuffled)
-        assert pipelines._driver_union_find(shuffled) == want
+        assert comp_ops.union_find(shuffled) == want
+    monkeypatch.setattr(comp_ops, "DRIVER_EDGE_CAP", 0)
     dist = {
         r.node: r.component
         for r in comp_ops.connected_components(
@@ -276,11 +275,11 @@ def test_neardup_gate_replay_stable_under_candidate_cap(
 
 
 def test_neardup_gate_distributed_cc_fallback(spark, tmp_path, monkeypatch):
-    """Above NEARDUP_GATE_CC_DRIVER_CAP the gate must switch from the
-    driver-side union-find to the distributed connected_components
-    fallback and admit the IDENTICAL set (r13, VERDICT r12 item 8:
-    the cap is a bounded-collect budget, so the path above it has to
-    be exercised, not just documented). Batch: two verbatim-twin
+    """Above components.DRIVER_EDGE_CAP the gate must switch from the
+    driver-side union-find to the distributed star fallback and admit
+    the IDENTICAL set (r13, VERDICT r12 item 8: the cap is a
+    bounded-collect budget, so the path above it has to be exercised,
+    not just documented). Batch: two verbatim-twin
     clusters plus a singleton; each cluster admits its min id under
     either component engine."""
     batch_rows = [
@@ -290,7 +289,7 @@ def test_neardup_gate_distributed_cc_fallback(spark, tmp_path, monkeypatch):
     ]
 
     def run(cap: int, suffix: str) -> list:
-        monkeypatch.setattr(pipelines, "NEARDUP_GATE_CC_DRIVER_CAP", cap)
+        monkeypatch.setattr(comp_ops, "DRIVER_EDGE_CAP", cap)
         t = str(tmp_path / f"idx_{suffix}")
         admitted = pipelines.neardup_gate_admit(
             spark.createDataFrame(batch_rows, DOC_SCHEMA),

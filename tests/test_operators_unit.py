@@ -247,7 +247,7 @@ def test_containment_catches_quote_jaccard_misses(spark):
     )
     got = [
         (r.contained, r.container, r.containment)
-        for r in nd.token_containment_pairs(docs, 0.9).collect()
+        for r in nd.array_containment_pairs(nd.token_sets(docs), 0.9).collect()
     ]
     assert got == [(1, 2, 1.0)]
     assert nd.token_jaccard_pairs(docs, 0.5).count() == 0
@@ -257,22 +257,20 @@ def test_containment_catches_quote_jaccard_misses(spark):
     )
     both = sorted(
         (r.contained, r.container)
-        for r in nd.token_containment_pairs(twin, 0.9).collect()
+        for r in nd.array_containment_pairs(nd.token_sets(twin), 0.9).collect()
     )
     assert both == [(1, 2), (2, 1)]
 
 
-def test_star_components_equal_minlabel_on_random_graphs(spark):
-    """Property: large-star/small-star and min-label propagation are
-    the same function — identical (node, component) sets on arbitrary
-    graphs (random edge soups with isolated pairs, chains, and merged
+def test_star_components_equal_minlabel_on_random_graphs(spark, monkeypatch):
+    """Property: the driver's min-label union-find and the large-star/
+    small-star fallback (forced by a zero edge cap) are the same
+    function — identical (node, component) sets on arbitrary graphs
+    (random edge soups with isolated pairs, chains, and merged
     clusters; fixed seeds, so deterministic)."""
     import random
 
-    from sparkstreaming_gmall_demo_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from sparkstreaming_gmall_demo_spark.operators import components as comp_ops
 
     for seed in (7, 23, 91):
         rnd = random.Random(seed)
@@ -282,36 +280,56 @@ def test_star_components_equal_minlabel_on_random_graphs(spark):
         ]
         edges = [(a, b) for a, b in edges if a != b]
         pairs = spark.createDataFrame(edges, "i long, j long")
-        minlabel = {
-            (r.node, r.component) for r in connected_components(pairs).collect()
-        }
-        star = {
+        driver = {
             (r.node, r.component)
-            for r in connected_components_star(pairs).collect()
+            for r in comp_ops.connected_components(pairs).collect()
         }
-        assert star == minlabel, f"seed {seed}"
+        with monkeypatch.context() as m:
+            m.setattr(comp_ops, "DRIVER_EDGE_CAP", 0)
+            star = {
+                (r.node, r.component)
+                for r in comp_ops.connected_components(pairs).collect()
+            }
+        assert star == driver, f"seed {seed}"
 
 
-def test_star_components_long_chain_log_rounds(spark):
-    """The reason the variant exists: a 64-node chain (diameter 63)
-    must converge in O(log n) rounds — min-label would need ~63
-    propagation rounds; star alternation halves label-tree depth per
-    round. Pin the log bound with margin."""
-    from sparkstreaming_gmall_demo_spark.operators.components import (
-        connected_components_star,
-    )
+def _chain_components(spark, monkeypatch, caplog, max_iter):
+    from sparkstreaming_gmall_demo_spark.operators import components as comp_ops
 
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "i long, j long"
     )
-    stats: dict = {}
-    got = {
-        r.node: r.component
-        for r in connected_components_star(pairs, stats=stats).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= 12, stats  # log2(64)=6; margin for detection round
+    monkeypatch.setattr(comp_ops, "DRIVER_EDGE_CAP", 0)
+    with caplog.at_level("WARNING", logger=comp_ops.__name__):
+        got = {
+            r.node: r.component
+            for r in comp_ops.connected_components(
+                pairs, max_iter=max_iter
+            ).collect()
+        }
+    warned = [r for r in caplog.records if "max_iter" in r.getMessage()]
+    return got, warned
+
+
+def test_star_components_long_chain_log_rounds(spark, monkeypatch, caplog):
+    """The reason the fallback is star alternation: a 64-node chain
+    (diameter 63) must converge in O(log n) rounds — min-label
+    propagation would need ~63; star alternation halves label-tree
+    depth per round. Pin the log bound with margin: 12 rounds (log2(64)
+    = 6, plus the detection round) finish without the cap warning."""
+    got, warned = _chain_components(spark, monkeypatch, caplog, max_iter=12)
+    assert got == {i: 0 for i in range(64)}
+    assert not warned
+
+
+def test_star_components_warn_at_iteration_cap(spark, monkeypatch, caplog):
+    """Two star rounds cannot collapse a 64-node chain: the fallback
+    stops at max_iter and says so with a WARNING instead of silently
+    returning split components."""
+    got, warned = _chain_components(spark, monkeypatch, caplog, max_iter=2)
+    assert len(warned) == 1 and warned[0].levelname == "WARNING"
+    assert len(set(got.values())) > 1  # unconverged: the chain is split
 
 
 # ---------------------------------------------------------------------------
@@ -502,7 +520,7 @@ def test_curation_bundle_matches_keep_best_and_dedup_aware_split(spark):
         "i long, j long",
     )
     splits = {"train": 0.5, "val": 0.25, "test": 0.25}
-    labels = connected_components(pairs, unique_pairs=True)
+    labels = connected_components(pairs)
     kept = {r.doc_id for r in keep_best(docs, labels, "n_chars").collect()}
     want: dict = {}
     for r in dedup_aware_split(docs, labels, splits).collect():

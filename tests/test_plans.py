@@ -163,23 +163,6 @@ def test_curation_scans_documents_once(spark):
     assert plan.count("Scan parquet") == 2  # tree + details = one scan
 
 
-def test_containment_filtered_probes_prefix_not_all_pairs(spark):
-    """ext_containment_pairs_filtered: the candidate join must probe
-    the length-bounded rarest-element prefix of the contained side
-    (|A| - ceil(t|A|) + 1), never the full posting list of both sides
-    — that prefix filter is the entry's whole claim to 100x survival.
-    r13 shape: the prefix is an in-row sort_array + slice after a
-    per-doc aggregate (frequencies from a count-over-token window),
-    replacing the r12 freq-join + per-doc row_number window — assert
-    the slice bound and that NO per-doc sort window remains. No
-    cartesian anywhere."""
-    plan = plan_of(spark, "ext_containment_pairs_filtered")
-    assert "slice(" in plan and "sort_array" in plan, "prefix slice missing"
-    assert "row_number" not in plan, "per-doc row_number window crept back"
-    assert "CEIL" in plan.upper(), "prefix length bound missing"
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-
-
 def test_decontam_shuffles_counts_not_shingles(spark):
     """Decontamination: exploded shingle strings must be consumed by
     the map-side partial aggregate — never cross a shuffle. The only

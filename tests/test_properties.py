@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from sparkstreaming_gmall_demo_spark.functions import permille
@@ -308,10 +310,12 @@ def test_cm_estimate_matches_python_model_bounds(spark):
         assert est[t] >= c, t
 
 
-def test_containment_pairs_match_python_model(spark):
-    """array_containment_pairs == brute-force Python over randomized
-    token sets (subset plants, partial overlaps, disjoint sets, dup
-    elements pre-distinct) — every ordered pair, exact denominators."""
+@pytest.mark.parametrize("measure", ["jaccard", "containment"])
+def test_exact_pair_kernels_match_python_model(spark, measure):
+    """array_jaccard_pairs (every unordered pair) and
+    array_containment_pairs (every ordered pair) == brute-force Python
+    over randomized token sets (subset plants, partial overlaps,
+    disjoint sets, dup elements pre-distinct), exact denominators."""
     import random
 
     from sparkstreaming_gmall_demo_spark.operators import neardup as nd
@@ -329,19 +333,28 @@ def test_containment_pairs_match_python_model(spark):
     df = spark.createDataFrame(
         [(i, list(t)) for i, t in rows], "doc_id long, toks array<string>"
     )
-    for t in (0.5, 0.9, 1.0):
-        got = {
-            (r.contained, r.container): r.containment
-            for r in nd.array_containment_pairs(df, t).collect()
-        }
+    for t in (0.3, 0.5, 0.9, 1.0):
+        if measure == "jaccard":
+            got = {
+                (r.i, r.j): r.jaccard
+                for r in nd.array_jaccard_pairs(df, t).collect()
+            }
+        else:
+            got = {
+                (r.contained, r.container): r.containment
+                for r in nd.array_containment_pairs(df, t).collect()
+            }
         want = {}
         for a, sa in sets_py.items():
             for b, sb in sets_py.items():
-                if a == b:
+                if measure == "jaccard" and a < b:
+                    v = len(sa & sb) / len(sa | sb)
+                elif measure == "containment" and a != b:
+                    v = len(sa & sb) / len(sa)
+                else:
                     continue
-                c = len(sa & sb) / len(sa)
-                if c >= t:
-                    want[(a, b)] = round(c, 4)
+                if v >= t:
+                    want[(a, b)] = round(v, 4)
         assert got == want, f"threshold {t}"
 
 
